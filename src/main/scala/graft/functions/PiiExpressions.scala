@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * cardWindows))`: the window derivation ran as interpreted
   * higher-order lambdas whose per-candidate tree re-evaluated a
   * regex split per group reference and a 16-iteration `aggregate`
-  * Luhn per window (ProbeT31Parts put ~0.3 s of t31's 0.4 s wall in
+  * Luhn per window (a per-pass profile put ~0.3 s of t31's 0.4 s wall in
   * exactly this machinery — the r19 verdict's t31 watch item). The
   * kernel runs the SAME java.util.regex candidate pattern Spark's
   * `regexp_extract_all` uses (engine-identical matches), then derives

@@ -29,7 +29,7 @@ import graft.stats.{Design, Glm}
   * Oracle (r16, upgraded from a pin — the h1 committed-fixture
   * discipline): the deterministic fitted coefficients are committed at
   * full double precision in oracles/t16_coefs.csv keyed by corpus doc
-  * count (regenerate: `Test/runMain graft.ProbeMain oraclefix` after an
+  * count (regenerate: `Test/runMain graft.Regen oraclefix` after an
   * intentional feature/IRLS change); DuckDB recomputes the features and
   * the closed-form dot-product + sigmoid scoring from them. The compare
   * therefore checks BOTH that the live IRLS still reproduces the

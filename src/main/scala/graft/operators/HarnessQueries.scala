@@ -34,7 +34,7 @@ object HarnessQueries {
     *
     * Oracle (r10, upgraded from a pin): the DETERMINISTIC per-rep
     * estimates are committed at full double precision in
-    * oracles/h1_per_rep.csv (regenerate: `Test/runMain graft.ProbeMain
+    * oracles/h1_per_rep.csv (regenerate: `Test/runMain graft.Regen
     * oraclefix` after an intentional estimator change); DuckDB
     * recomputes the metric aggregation (avg/SE/rMSE/coverage — plain
     * SQL over the per-rep rows) from that fixture. The compare
@@ -78,7 +78,7 @@ object HarnessQueries {
     * Oracle (r13, upgraded from a pin — the same committed-per-rep
     * fixture discipline as h1/h3/s4): the deterministic per-scenario
     * per-rep estimates live in oracles/h2_per_rep.csv (regenerate:
-    * `Test/runMain graft.ProbeMain oraclefix` after an intentional
+    * `Test/runMain graft.Regen oraclefix` after an intentional
     * estimator/DGP change); DuckDB recomputes the metric aggregation
     * from them, so the compare checks both that the live perturbed-DGP
     * pipeline reproduces the committed per-rep values and that the

@@ -199,24 +199,13 @@ object PiiQueries {
     * `flatten(transform(regexp_extract_all(t, cardRe), cardWindows))`
     * with interpreted HOF lambdas — re-evaluated a regex per group
     * reference and a 16-step `aggregate` Luhn per window;
-    * ProbeT31Parts put ~0.3 s of t31's wall in that machinery. Same
+    * a per-pass profile put ~0.3 s of t31's wall in that machinery. Same
     * regex engine (java.util.regex), same candidate pattern, same
     * window semantics; PiiScrubSpec and the t31 oracle hash pin the
     * parity. */
   private def validCardWindows(t: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column =
     graft.functions.CardLuhnWindows.cardLuhnWindows(t)
-
-  /** The card extraction + fold ALONE over an already-SSN-scrubbed
-    * column (dev-probe seat — ProbeT31Parts decomposes t31's wall time
-    * per class pass; keeping the derivation here means the probe can
-    * never drift from [[piiScrubV2]]'s actual card stage). */
-  private[graft] def cardFoldForProbe(df: DataFrame, textCol: String): DataFrame = {
-    val t3 = col(textCol)
-    val valid = validCardWindows(t3)
-    df.withColumn("t4", aggregate(array_sort(array_distinct(valid)), t3,
-      (acc, c) => replace(acc, c, lit("[CARD]"))))
-  }
 
   /** Adds per-class counts and `redacted` under the v2 class set.
     * Valid-card redaction folds the DISTINCT valid window literals

@@ -457,18 +457,34 @@ object PipelineQueries {
   /** Per-(sf, application) release root: the appId component keeps two
     * concurrent runs (a bench racing a verify, two sessions) from
     * publishing into the same root — publishRelease's writer contract
-    * is single-maintainer. Dirs live under java.io.tmpdir and are
-    * swept with it; nothing else references them. ONE definition
-    * shared by p4 (publishes) and the fromRelease audit family
-    * (resolves the current version), so an audit can never read a
-    * different root than the publisher wrote. */
+    * is single-maintainer. Dirs live under java.io.tmpdir; the root and
+    * its `_incr`/`_fuzzy` siblings are deleted when the application
+    * ends, since nothing outside the application references them. ONE
+    * definition shared by p4 (publishes) and the fromRelease audit
+    * family (resolves the current version), so an audit can never read
+    * a different root than the publisher wrote. */
   private[graft] def releaseRoot(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    s"${System.getProperty("java.io.tmpdir")}/graft_release_${key}_" +
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_release_${key}_" +
       s.sparkContext.applicationId
+    if (sweptRoots.add(root)) {
+      val conf = s.sparkContext.hadoopConfiguration
+      s.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onApplicationEnd(
+            e: org.apache.spark.scheduler.SparkListenerApplicationEnd): Unit = {
+          val p = new org.apache.hadoop.fs.Path(root)
+          val fs = p.getFileSystem(conf)
+          val family = new org.apache.hadoop.fs.Path(p.getParent, s"{${p.getName},${p.getName}_*}")
+          Option(fs.globStatus(family)).foreach(_.foreach(st => fs.delete(st.getPath, true)))
+        }
+      })
+    }
+    root
   }
+
+  private val sweptRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   // JVM-level gate for the publish-if-absent path: parallel spec suites
   // sharing one session must not race publishRelease (its writer

@@ -145,7 +145,7 @@ object StatQueries {
     },
     // r10, upgraded from a pin: the battery's expected output is a
     // committed fixture (oracles/s4_battery.csv, regenerate via
-    // `Test/runMain graft.ProbeMain oraclefix` after an INTENTIONAL
+    // `Test/runMain graft.Regen oraclefix` after an INTENTIONAL
     // estimator change — values reviewed against GoldenSpec's
     // full-panel parity). Unlike h1/h3 there is no aggregation for
     // DuckDB to recompute — the oracle is a cross-engine-loaded

@@ -83,7 +83,14 @@ object Battery {
     "P-WCLS-Pooled-Obs", "ET-WCLS-Equal", "ET-WCLS-Kron", "ET-WCLS",
     "DR-WCLS", "PET-WCLS")
 
-  /** The committed golden panel (reference example_dat.csv, 800 users). */
-  def examplePanel(spark: SparkSession): DataFrame =
-    graft.sources.Tables.panelCsv(spark, "/root/reference/example_dat.csv", 800)
+  /** The reference's example panel (example_dat.csv, 800 users). It lives
+    * outside the repo, so a missing file fails with one line naming it. */
+  private val examplePath = "/root/reference/example_dat.csv"
+
+  def examplePanel(spark: SparkSession): DataFrame = {
+    if (!java.nio.file.Files.isRegularFile(java.nio.file.Paths.get(examplePath)))
+      throw new java.io.FileNotFoundException(
+        s"reference panel $examplePath is missing; the golden and s4/s5/s6 checks need it")
+    graft.sources.Tables.panelCsv(spark, examplePath, 800)
+  }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import graft.harness.{AcceptanceChecks, GridRunner, SimulationRunner}
   * efficiency, tilt-warning parity/rates (reference numbers:
   * results/simulation_results.csv; bolding rules simulation.R:516-530).
   */
-class AcceptanceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AcceptanceSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "results/acceptance"
   private val cellDirs = Seq("cell_25_25", "cell_100_100", "cell_400_400",

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,8 @@ import graft.operators.SampleQueries
   * machinery's own exactness proofs live in TokenBudgetSpec; this spec
   * checks the two-phase composition semantics.
   */
-class AnnealPlanSpec extends AnyFunSuite {
+class AnnealPlanSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   // text sized to make quality and n_tokens vary; ids deliberately

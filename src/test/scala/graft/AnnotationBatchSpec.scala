@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** t30 — margin-sampling annotation batch: the selected k docs must be
@@ -10,13 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * property is what the batch exists for: nothing outside the batch is
   * less sure than anything inside it.
   */
-class AnnotationBatchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AnnotationBatchSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.sources.Tables
   * rank cushion). A sketch that drifts outside these gates is broken
   * even if it is deterministic.
   */
-class ApproxSketchSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ApproxSketchSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 
@@ -75,12 +68,12 @@ class ApproxSketchSpec extends AnyFunSuite {
   test("q30 day-over-day appends rollup identically to the all-at-once table") {
     import graft.operators.OlapQueries
     val orders = Tables.orders(spark, dir)
-    val full = java.nio.file.Files.createTempDirectory("graft_hll_full").toString + "/sk"
+    val full = tempDir("graft_hll_full") + "/sk"
     OlapQueries.initSketchTable(spark, full, orders)
     val expected = OlapQueries.quarterlyRollup(spark, full).collect().toSeq
     // the scheduler's loop: an initial snapshot plus two later batches,
     // one of which splits a month across batches (partial-month rows)
-    val inc = java.nio.file.Files.createTempDirectory("graft_hll_inc").toString + "/sk"
+    val inc = tempDir("graft_hll_inc") + "/sk"
     val cut1 = col("o_orderdate") < "1997-06-15"
     val cut2 = col("o_orderdate") < "1997-11-01"
     OlapQueries.initSketchTable(spark, inc, orders.filter(cut1))
@@ -126,7 +119,7 @@ class ApproxSketchSpec extends AnyFunSuite {
   test("q30 compaction merges partial months, preserves rollups, and keeps absorbed tags rejected") {
     import graft.operators.OlapQueries
     val orders = Tables.orders(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_hll_cmp").toString + "/sk"
+    val path = tempDir("graft_hll_cmp") + "/sk"
     val cut1 = col("o_orderdate") < "1997-06-15"
     val cut2 = col("o_orderdate") < "1997-11-01"
     OlapQueries.initSketchTable(spark, path, orders.filter(cut1))
@@ -167,7 +160,7 @@ class ApproxSketchSpec extends AnyFunSuite {
     // the all-at-once table, estimates stay within the split-month band
     OlapQueries.appendSketchTable(spark, path, orders.filter(!cut2), "b2")
     OlapQueries.compactSketchTable(spark, path)
-    val full = java.nio.file.Files.createTempDirectory("graft_hll_cmp_f").toString + "/sk"
+    val full = tempDir("graft_hll_cmp_f") + "/sk"
     OlapQueries.initSketchTable(spark, full, orders)
     val expected = OlapQueries.quarterlyRollup(spark, full).collect().toSeq
     val got = OlapQueries.quarterlyRollup(spark, path).collect().toSeq

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stats.{Battery, Estimators, LocalBattery}
 
@@ -8,13 +7,7 @@ import graft.stats.{Battery, Estimators, LocalBattery}
   * (same math, two execution paths — the same cross-check the golden
   * specs give the other nine methods, which A-WCLS lacks upstream).
   */
-class AwclsEquivalenceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class AwclsEquivalenceSpec extends AnyFunSuite with SparkTestSession {
 
   test("distributed A-WCLS == executor-local A-WCLS on the golden panel") {
     val df = Battery.examplePanel(spark).cache()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ContaminationQueries
@@ -13,13 +13,8 @@ import graft.operators.ContaminationQueries
   * (residual 0 everywhere because the release stack drops every hit
   * doc). Cross-engine agreement on real data is the oracle row's job.
   */
-class BenchmarkClearanceSpec extends AnyFunSuite {
+class BenchmarkClearanceSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   /** The release's deterministic split rule (SampleQueries.splitCol),

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,8 @@ import graft.operators.SampleQueries
   * extraction itself is the RegisteredDomain kernel's job (DomainSpec /
   * oracle c13); here domains are given columns.
   */
-class BlocklistGateSpec extends AnyFunSuite {
+class BlocklistGateSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def docsOf(rows: Seq[(Long, String)]): DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.BloomMightContainExpr
@@ -13,13 +12,7 @@ import graft.operators.ContaminationQueries
   *  - the composed bloom+confirm result equals the no-bloom exact
   *    computation (false positives all die in the confirm join).
   */
-class BloomScrubSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BloomScrubSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

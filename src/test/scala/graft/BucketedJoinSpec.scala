@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,17 +15,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * session) and the bucketed tables get explicit temp-dir paths (the
   * static warehouse dir can't be changed post-creation).
   */
-class BucketedJoinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class BucketedJoinSpec extends AnyFunSuite with SparkTestSession {
 
   test("bucketed tables join with no exchange; unbucketed ones shuffle") {
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    val tmp = tempDir("graft_bucketed")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
     try {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Structural invariants of the chunking/packing operators that the
@@ -8,13 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * formula bug would hash-match): chunk coverage and non-redundancy
   * for t12, offset contiguity for t13.
   */
-class ChunkPackSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ChunkPackSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 

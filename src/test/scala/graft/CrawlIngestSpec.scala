@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -17,13 +17,7 @@ import graft.streaming.{CrawlIngest, GateIngest, StreamIdentity}
   * concatenated arrivals; (2) crash/replay convergence across ALL the
   * stores a batch touches, including a crash BETWEEN stage folds.
   */
-class CrawlIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class CrawlIngestSpec extends AnyFunSuite with SparkTestSession {
 
   // gate-passing prose (the GateIngestSpec recipe: stopword density,
   // alpha words, varied vocabulary) with per-doc-unique payload words
@@ -65,7 +59,7 @@ class CrawlIngestSpec extends AnyFunSuite {
     (2L, goodText(91), "https://seed.org/2"))
 
   private def freshStores(): (String, String, String, String) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_crawl").toString
+    val tmp = tempDir("graft_crawl")
     val (u, g, d, r) = (s"$tmp/url", s"$tmp/gate", s"$tmp/dedup", s"$tmp/rel")
     UrlQueries.initStoredUrlIndex(spark, u, docsDf(seed).select("doc_id", "url"))
     DedupQueries.initStoredIndex(spark, d, docsDf(seed).select("doc_id", "text"))

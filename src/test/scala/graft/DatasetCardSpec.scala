@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PipelineQueries
@@ -12,13 +11,7 @@ import graft.sources.DatasetCard
   * the split table's numbers are cross-checked against p5f's own
   * output rows.
   */
-class DatasetCardSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DatasetCardSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
   private lazy val card = DatasetCard.render(spark, dir)
@@ -30,7 +23,7 @@ class DatasetCardSpec extends AnyFunSuite {
     val committed = java.nio.file.Files.readString(
       java.nio.file.Paths.get("results/dataset_card_sf001.md"))
     assert(committed == card,
-      "results/dataset_card_sf001.md is stale — regenerate via DatasetCard.write")
+      "results/dataset_card_sf001.md is stale — regenerate via `Test/runMain graft.Regen card`")
   }
 
   test("sections present in fixed order") {
@@ -107,7 +100,7 @@ class DatasetCardSpec extends AnyFunSuite {
     val committed = java.nio.file.Files.readString(
       java.nio.file.Paths.get("results/dataset_card_sf001.json"))
     assert(committed == cardJson,
-      "results/dataset_card_sf001.json is stale — regenerate via CardRegenMain")
+      "results/dataset_card_sf001.json is stale — regenerate via `Test/runMain graft.Regen card`")
   }
 
   test("JSON states exactly the markdown tables' numbers (shared CardData, field for field)") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ContaminationQueries
@@ -12,13 +12,8 @@ import graft.operators.ContaminationQueries
   * (shared grams and docs hit are non-increasing in n) on the fixture
   * and on real data. Cross-engine agreement is the oracle row's job.
   */
-class DecontaminationProfileSpec extends AnyFunSuite {
+class DecontaminationProfileSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def uniq(tag: String, n: Int) = (1 to n).map(i => s"$tag$i")

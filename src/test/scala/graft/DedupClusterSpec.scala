@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{DedupClusters, DedupQueries}
 
@@ -8,13 +7,7 @@ import graft.operators.{DedupClusters, DedupQueries}
   * truth on the real MinHash pair list (plus a synthetic chain that
   * needs multiple propagation rounds).
   */
-class DedupClusterSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupClusterSpec extends AnyFunSuite with SparkTestSession {
 
   private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map[Long, Long]()

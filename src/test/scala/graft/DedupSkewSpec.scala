@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,7 @@ import graft.operators.DedupQueries
   * near-dup pairs as the unsalted form — salting spreads a hot bucket's
   * O(w²) pair generation across tasks, it must never change the output.
   */
-class DedupSkewSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DedupSkewSpec extends AnyFunSuite with SparkTestSession {
 
   private def skewedCorpus = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import graft.operators.{ContaminationQueries, DedupClusters, DedupQueries}
   * not crash (array-HOF expressions on empty/short inputs are the usual
   * trap: negative-length sequence(), array_min of an empty array...).
   */
-class DegenerateInputSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DegenerateInputSpec extends AnyFunSuite with SparkTestSession {
 
   import spark.implicits._
 
@@ -43,7 +36,7 @@ class DegenerateInputSpec extends AnyFunSuite {
   }
 
   test("appendable index: empty and all-short increments probe to no pairs, empty append is a no-op") {
-    val path = java.nio.file.Files.createTempDirectory("graft_idx_degen").toString + "/mh"
+    val path = tempDir("graft_idx_degen") + "/mh"
     val corpus = Seq(
       (1L, "the quick brown fox jumps over the lazy dog by the river"),
       (2L, "the quick brown fox jumps over the lazy dog by the creek")).toDF("doc_id", "text")

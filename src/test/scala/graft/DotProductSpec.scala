@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorExpressions.fdot
@@ -9,13 +8,7 @@ import graft.functions.VectorExpressions.fdot
   * aggregate(zip_with(...)) formulation (same ascending-index order) —
   * the property the DuckDB oracle comparison relies on.
   */
-class DotProductSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class DotProductSpec extends AnyFunSuite with SparkTestSession {
 
   test("codegen DotProduct is bit-identical to the HOF formulation") {
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupClusters, DedupQueries}
@@ -13,13 +12,7 @@ import graft.sources.Tables
   * break, singleton coverage) and on the real d6 chain, across both
   * the broadcast and the measured-guard labeling routes.
   */
-class ElectionLosersSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ElectionLosersSpec extends AnyFunSuite with SparkTestSession {
 
   private def docsOf(rows: (Long, String, Long)*) = {
     import spark.implicits._

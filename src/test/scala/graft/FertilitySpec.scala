@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,8 @@ import graft.functions.MergeTable
   * layout invariance. Merge-encode correctness itself is SubwordSpec /
   * oracle t22's job — here the merges are a fixture.
   */
-class FertilitySpec extends AnyFunSuite {
+class FertilitySpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   // 'aa' merges to one token under this table; 'b' stays one char

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.harness.{FigureFrames, FullGrid, SimulationRunner}
@@ -11,13 +11,7 @@ import graft.harness.{FigureFrames, FullGrid, SimulationRunner}
   * checkpoints (i.e. the artifacts are this engine's output, not stale
   * dumps). Regenerate with `runMain graft.harness.FullGrid`.
   */
-class FigureFramesSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FigureFramesSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "results/acceptance"
   private val cellDirs = (FullGrid.fullRepCells ++ FullGrid.scaleCells)

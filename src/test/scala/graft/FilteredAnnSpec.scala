@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import graft.sources.Tables
   * shape, recall against filtered brute-force ground truth, and the
   * routing boundary itself.
   */
-class FilteredAnnSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FilteredAnnSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,16 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * queries, upgrading these rows from "rows-only" to machine-checked.
   *
   * Regenerate after an INTENTIONAL semantic change with:
-  * `sbt 'Test/runMain graft.ProbeMain pins'` (prints STABLE/UNSTABLE per
+  * `sbt 'Test/runMain graft.Regen pins'` (prints STABLE/UNSTABLE per
   * query; only commit STABLE hashes).
   */
-class FixturePinSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FixturePinSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 
@@ -38,7 +31,7 @@ class FixturePinSpec extends AnyFunSuite {
     // r22 mid-round regeneration, 2026-08-19 19:27) — q30's
     // orders/events input moves per regeneration while
     // documents/embeddings stay identical, so this is the one pin
-    // expected to drift at round boundaries; ProbeMain pins reported
+    // expected to drift at round boundaries; Regen pins reported
     // the new hash STABLE across reps, every other pin held
     "q30_sketch_union"         -> "7991473430476d2b3ef76565c6b7c732",
     "s3_logistic_irls"         -> "3142949dbddbd4c5163a2c857e2cb0c4",
@@ -68,7 +61,7 @@ class FixturePinSpec extends AnyFunSuite {
       val got = CanonicalHash(SparkEntry.queries(name)(spark, dir))
       assert(got == expected,
         s"$name canonical hash drifted: got $got, pinned $expected — if the " +
-          "change is intentional, regenerate via ProbeMain pins")
+          "change is intentional, regenerate via Regen pins")
     }
   }
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.PipelineQueries
@@ -18,13 +17,7 @@ import graft.operators.PipelineQueries
   * plans scan ONLY the release directory (plus stored indexes), never
   * the raw documents table.
   */
-class FromReleaseSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FromReleaseSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 

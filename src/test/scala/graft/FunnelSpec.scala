@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +10,8 @@ import graft.operators.PipelineQueries
   * proves cross-engine equality on the real corpus; this spec proves
   * each stage's semantics in isolation (which doc fell where and why).
   */
-class FunnelSpec extends AnyFunSuite {
+class FunnelSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   // a gate-passing body: 60 words with stopwords (GopherSpec's recipe)

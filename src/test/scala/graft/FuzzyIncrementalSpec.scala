@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,13 +24,7 @@ import graft.sources.{IncrementalRelease, IndexStore, Tables}
   * appendFuzzyMineIndex]], the r19 verdict's #1) — across a THREE-day
   * chain whose day-3 dups exist only against day-2's folded increment.
   */
-class FuzzyIncrementalSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class FuzzyIncrementalSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -120,7 +112,7 @@ class FuzzyIncrementalSpec extends AnyFunSuite {
       "https://ex407.com/p/407"))
 
   private def freshPaths(): (String, String, String) = {
-    val tmp = Files.createTempDirectory("graft_fuzzyincr").toString
+    val tmp = tempDir("graft_fuzzyincr")
     (s"$tmp/url", s"$tmp/fz", s"$tmp/rel")
   }
 

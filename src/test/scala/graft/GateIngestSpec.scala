@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,13 +11,7 @@ import graft.streaming.GateIngest
   * audit row exactness, exactly-once audit under replay, and the
   * batch-start sweep healing a crashed prior attempt.
   */
-class GateIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GateIngestSpec extends AnyFunSuite with SparkTestSession {
 
   // crafted docs: 'good' pass the Gopher battery + quality; 'junk' fail
   // the symbol/alpha rules; one good doc carries PII to be scrubbed
@@ -41,8 +34,7 @@ class GateIngestSpec extends AnyFunSuite {
     }
 
   test("auditTableOf on a not-yet-published path returns the promised empty frame") {
-    val fresh = java.nio.file.Files
-      .createTempDirectory("graft_gate_fresh").toString + "/gate"
+    val fresh = tempDir("graft_gate_fresh") + "/gate"
     val df = GateIngest.auditTableOf(spark, fresh)
     assert(df.count() == 0L)
     assert(df.columns.contains("n_in") && df.columns.contains("batch_id"))
@@ -52,8 +44,7 @@ class GateIngestSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    val auditPath = java.nio.file.Files
-      .createTempDirectory("graft_gate_audit").toString + "/gate"
+    val auditPath = tempDir("graft_gate_audit") + "/gate"
 
     val src = MemoryStream[(Long, String)]
     val kept = scala.collection.mutable.SortedMap[Long, Seq[(Long, String)]]()

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.PanelGenerator
 import graft.harness.SimulationRunner
 
-class GeneratorSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GeneratorSpec extends AnyFunSuite with SparkTestSession {
 
   private val cfg = PanelGenerator.Config(nInternal = 200, nExternal = 200)
 
@@ -48,6 +41,20 @@ class GeneratorSpec extends AnyFunSuite {
       .agg(corr("x1", "x1l")).head().getDouble(0)
     assert(math.abs(ac - 0.5) < 0.1, s"ar(1) autocorr $ac")
     df.unpersist()
+  }
+
+  test("panelReps is bit-identical to the union of per-replication panels") {
+    val small = PanelGenerator.Config(nInternal = 7, nExternal = 5, tMax = 4)
+    val base = 9100000L
+    val perRep = (1 to 3).map { rep =>
+      PanelGenerator.panel(spark, base + rep, small).withColumn("replication", lit(rep))
+    }.reduce(_ unionByName _)
+    val reps = PanelGenerator.panelReps(spark, base, small, 3)
+    val cols = perRep.columns.sorted.map(col)
+    assert(reps.columns.sorted.sameElements(perRep.columns.sorted))
+    assert(reps.count() == 3 * 12 * 4)
+    assert(perRep.select(cols: _*).exceptAll(reps.select(cols: _*)).count() == 0)
+    assert(reps.select(cols: _*).exceptAll(perRep.select(cols: _*)).count() == 0)
   }
 
   test("simulation harness smoke: metrics shape + calibration direction") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stats.Battery
 
@@ -9,14 +8,7 @@ import graft.stats.Battery
   * input bytes, independent math stack) and require the published
   * estimates/SEs of example_estimates.csv at printed precision.
   */
-class GoldenSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .appName("golden")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GoldenSpec extends AnyFunSuite with SparkTestSession {
 
   private val golden = GoldenValues.estimates
 

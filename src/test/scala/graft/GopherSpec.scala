@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,8 @@ import graft.operators.GopherQueries
   * row's job; this spec pins the semantics the oracle can't isolate
   * (which rule fired, kernel edge cases).
   */
-class GopherSpec extends AnyFunSuite {
+class GopherSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def kernel(tokens: Seq[String], n: Int): (Long, Long, Long, Long, Long) = {

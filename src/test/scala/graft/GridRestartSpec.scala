@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,20 +10,14 @@ import graft.harness.{GridRunner, SimulationRunner}
   * finished cells). A grid interrupted after cell A must, on restart with
   * cells A+B, load A from disk (byte-identical) and compute only B.
   */
-class GridRestartSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class GridRestartSpec extends AnyFunSuite with SparkTestSession {
 
   private val cellA = SimulationRunner.Cell(6, 6)
   private val cellB = SimulationRunner.Cell(8, 8)
   private val methods = Seq("WCLS-Internal", "WCLS-Pooled")
 
   test("a partially-complete grid resumes without recomputing finished cells") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_ckpt").toString
+    val dir = tempDir("graft_grid_ckpt")
 
     // "killed mid-run": only cell A finished and checkpointed
     val (_, s1) = GridRunner.runGrid(spark, Seq(cellA), nReps = 3, methods, Some(dir))
@@ -47,7 +40,7 @@ class GridRestartSpec extends AnyFunSuite {
   }
 
   test("a lower-rep rerun refuses to overwrite a higher-rep checkpoint") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_grid_guard").toString
+    val dir = tempDir("graft_grid_guard")
     GridRunner.runGrid(spark, Seq(cellA), nReps = 3, methods, Some(dir))
     // a quick pass (fewer reps) against the same dir must refuse loudly
     // instead of silently recomputing over the committed checkpoint

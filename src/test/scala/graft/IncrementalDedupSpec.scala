@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +13,7 @@ import graft.sources.Tables
   * per-doc deterministic, so the index-probe path and the full-run path
   * must agree bit-for-bit.)
   */
-class IncrementalDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalDedupSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -66,7 +59,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("appendable index: day-over-day init -> probe -> append -> probe equals full re-mines") {
     val docs = Tables.documents(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_appendable_idx").toString + "/minhash"
+    val path = tempDir("graft_appendable_idx") + "/minhash"
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard"))).toSeq
 
@@ -120,7 +113,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
 
   test("a geometry-mismatched probe or append fails loudly, never returns empty") {
     val docs = Tables.documents(spark, dir)
-    val path = java.nio.file.Files.createTempDirectory("graft_geom_idx").toString + "/minhash"
+    val path = tempDir("graft_geom_idx") + "/minhash"
     DedupQueries.initStoredIndex(spark, path, docs.filter(col("doc_id") >= 100),
       k = 16, bands = 4)
     val inc = docs.filter(col("doc_id") < 100)

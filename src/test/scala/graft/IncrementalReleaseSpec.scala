@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,13 +14,7 @@ import graft.sources.{IncrementalRelease, ReleaseWriter}
   * lag-one retention with pool garbage collection, and the geometry
   * gate.
   */
-class IncrementalReleaseSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IncrementalReleaseSpec extends AnyFunSuite with SparkTestSession {
 
   // the c3 content-keyed split octet (restated — splitCol is
   // private[operators]; any deterministic split works for this spec)
@@ -45,8 +39,7 @@ class IncrementalReleaseSpec extends AnyFunSuite {
     .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
       r.getString(3), r.getString(4), r.getString(5))).sortBy(_._1).toSeq
 
-  private def newRoot() = java.nio.file.Files
-    .createTempDirectory("graft_incr_spec").toString + "/rel"
+  private def newRoot() = tempDir("graft_incr_spec") + "/rel"
 
   test("delta-published artifact equals today's logical release row for row, with genuine carry-forward") {
     val root = newRoot()

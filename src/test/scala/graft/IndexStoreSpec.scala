@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.IndexStore
@@ -10,19 +9,10 @@ import graft.sources.IndexStore
   * build is retried (never trusted), and the source stamp actually
   * moves when the source data changes.
   */
-class IndexStoreSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
-  private def tmpDir(): String =
-    java.nio.file.Files.createTempDirectory("graft_idx_spec").toString
+class IndexStoreSpec extends AnyFunSuite with SparkTestSession {
 
   test("build runs once per meta; a changed meta rebuilds; same meta reuses") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     var builds = 0
     IndexStore.ensure(spark, path, "meta_v1") { builds += 1 }
     IndexStore.ensure(spark, path, "meta_v1") { builds += 1 }
@@ -40,7 +30,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a crashed build leaves no stamp and is retried, never trusted") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     var attempts = 0
     intercept[RuntimeException] {
       IndexStore.ensure(spark, path, "meta") {
@@ -54,7 +44,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a waiter adopts the other builder's meta stamp without building") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     // simulate another JVM holding the lock: pre-create it, then stamp
     // the meta from a helper thread while ensure() is waiting
     val dir = new java.io.File(path); dir.mkdirs()
@@ -74,7 +64,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a live lock outlasting the wait deadline fails loudly instead of a concurrent takeover") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val dir = new java.io.File(path); dir.mkdirs()
     new java.io.File(dir, "_graft_build_lock").createNewFile() // fresh, never released
     var built = false
@@ -87,7 +77,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a stale lock (crashed builder) is broken and the build proceeds") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val dir = new java.io.File(path); dir.mkdirs()
     val lock = new java.io.File(dir, "_graft_build_lock")
     lock.createNewFile()
@@ -100,7 +90,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a waiter recovers when the holder's build fails and deletes the lock without stamping") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val dir = new java.io.File(path); dir.mkdirs()
     val lock = new java.io.File(dir, "_graft_build_lock")
     lock.createNewFile() // another JVM is building...
@@ -119,7 +109,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("sourceStamp moves when the source file changes") {
-    val f = java.nio.file.Paths.get(tmpDir(), "src.parquet")
+    val f = java.nio.file.Paths.get(tempDir("graft_idx_spec"), "src.parquet")
     java.nio.file.Files.writeString(f, "aaaa")
     val s1 = IndexStore.sourceStamp(spark, f.toString)
     assert(s1.contains("len=4"))
@@ -130,7 +120,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("sourceStamp handles empty dirs and sees nested (partitioned) leaf rewrites") {
-    val d = java.nio.file.Paths.get(tmpDir(), "part.parquet")
+    val d = java.nio.file.Paths.get(tempDir("graft_idx_spec"), "part.parquet")
     java.nio.file.Files.createDirectories(d)
     assert(IndexStore.sourceStamp(spark, d.toString) == "empty",
       "an existing-but-empty source dir must stamp, not throw")
@@ -150,7 +140,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("sourceStamp's per-file digest sees changes the aggregate totals miss") {
-    val d = java.nio.file.Paths.get(tmpDir(), "agg.parquet")
+    val d = java.nio.file.Paths.get(tempDir("graft_idx_spec"), "agg.parquet")
     java.nio.file.Files.createDirectories(d)
     val a = d.resolve("part-0.parquet"); val b = d.resolve("part-1.parquet")
     // pin every mtime to a constant so ONLY the per-file digest can
@@ -175,7 +165,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("the holder's heartbeat keeps a long build's lock fresh (slow != crashed)") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val lock = new java.io.File(path, "_graft_build_lock")
     // staleMs=600 -> heartbeat period max(50, 200)=200ms; the build runs
     // 1500ms (2.5x the stale window). Without the heartbeat the lock's
@@ -193,7 +183,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a successful build sweeps tombstone litter from crashed breakers") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val dir = new java.io.File(path); dir.mkdirs()
     val litter = new java.io.File(dir, "_graft_build_lock.broken.deadbeef")
     litter.createNewFile()
@@ -202,7 +192,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("compactTable splits a hot partition value across multiple writer files") {
-    val idx = tmpDir() + "/idx"
+    val idx = tempDir("graft_idx_spec") + "/idx"
     import spark.implicits._
     // one hot partition value: without a salt in the shuffle key the
     // whole value lands in ONE task and the filesPerTable knob is a
@@ -230,7 +220,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("versioned publication: old version survives one compaction (lag-one), legacy dir retires at the second") {
     import spark.implicits._
-    val idx = tmpDir() + "/idx"
+    val idx = tempDir("graft_idx_spec") + "/idx"
     (0L until 100L).toDF("x").repartition(4).write.parquet(s"$idx/tbl")
     IndexStore.compactTable(spark, idx, "tbl", None, filesPerTable = 1)
     // publish #1: data now in tbl__v1; the legacy dir is RETAINED so a
@@ -251,7 +241,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("a crash BEFORE the commit marker leaves the previous version current and is swept") {
     import spark.implicits._
-    val idx = tmpDir() + "/idx"
+    val idx = tempDir("graft_idx_spec") + "/idx"
     (0L until 50L).toDF("x").write.parquet(s"$idx/tbl")
     // a writer that crashed after writing its version dir but before the
     // marker create: garbage data in tbl__v1, NO tbl__v1.__commit
@@ -266,7 +256,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("losing the stale-lock takeover race re-enters the wait, never builds locklessly") {
-    val path = tmpDir() + "/idx"
+    val path = tempDir("graft_idx_spec") + "/idx"
     val dir = new java.io.File(path); dir.mkdirs()
     val lock = new java.io.File(dir, "_graft_build_lock")
     lock.createNewFile()
@@ -340,7 +330,7 @@ class IndexStoreSpec extends AnyFunSuite {
   for (fam <- Seq("sketch_months", "dedup_minhash", "pq_codes"))
     test(s"crash contract [$fam]: legacy mid-swap heal, compaction equality, pre-marker crash sweep") {
       val f = swapFamilies.find(_.name == fam).get
-      val path = tmpDir() + "/" + fam
+      val path = tempDir("graft_idx_spec") + "/" + fam
       f.init(path)
       val want = f.probe(path)
       assert(want.nonEmpty, s"$fam: empty probe baseline proves nothing")
@@ -387,7 +377,7 @@ class IndexStoreSpec extends AnyFunSuite {
 
   test("tag sweep is exact: tag 'day1' never deletes tag 'day1-retry' files (review finding)") {
     import spark.implicits._
-    val idx = tmpDir() + "/tags"
+    val idx = tempDir("graft_idx_spec") + "/tags"
     def publish(tag: String, v: Long): Unit =
       IndexStore.publishTaggedAppend(spark, idx, "t", tag) { stage =>
         Seq(v).toDF("x").coalesce(1).write.parquet(stage)
@@ -405,7 +395,7 @@ class IndexStoreSpec extends AnyFunSuite {
   }
 
   test("a resumed holder whose lock was taken over leaves the new holder's lock intact (review finding)") {
-    val path = tmpDir() + "/lockown"
+    val path = tempDir("graft_idx_spec") + "/lockown"
     val started = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     val t = new Thread(() => IndexStore.ensure(spark, path, "metaA") {

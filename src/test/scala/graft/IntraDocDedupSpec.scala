@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.LineDedupQueries
@@ -10,13 +9,7 @@ import graft.operators.LineDedupQueries
   * interleaved repeats), repeat-free passthrough, idempotence, and the
   * accounting identities the d13 audit aggregates.
   */
-class IntraDocDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class IntraDocDedupSpec extends AnyFunSuite with SparkTestSession {
 
   private def docsOf(rows: (Long, String)*) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{DedupClusters, DedupQueries}
@@ -11,13 +10,7 @@ import graft.sources.Tables
   * singleton identity, one-keep-per-cluster, broadcast-vs-shuffle route
   * parity, layout invariance.
   */
-class KeepBestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KeepBestSpec extends AnyFunSuite with SparkTestSession {
 
   // quality is monotone in length_ok (+0.5): same text, n_chars flips it
   private def docsOf(rows: (Long, String, Long)*) = {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,8 @@ import graft.operators.TextQueries
   * drift semantics (matching mix ≈ 0, skewed mix high, KL ≥ 0),
   * smoothing keeps missing tokens finite, layout invariance.
   */
-class KlDriftSpec extends AnyFunSuite {
+class KlDriftSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def docsOf(rows: Seq[(Long, String, String)]): DataFrame =

@@ -1,20 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.harness.LatexReport
 
 /** S4 LaTeX report emitter (simulation.R:444-581): formatting-rule unit
   * checks on a synthetic metrics frame with hand-computed bold
   * decisions, plus byte-equality against the committed fixture generated
-  * from the committed acceptance metrics (`ProbeMain latex`). */
-class LatexReportSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  * from the committed acceptance metrics (`Regen latex`). */
+class LatexReportSpec extends AnyFunSuite with SparkTestSession {
 
   test("print_exact_number_nicely parity (simulation.R:445-453)") {
     assert(LatexReport.printExactNumberNicely(5.0) == "5")
@@ -59,7 +52,7 @@ class LatexReportSpec extends AnyFunSuite {
   test("committed fixture regenerates byte-identically from committed metrics") {
     val path = java.nio.file.Paths.get("results/acceptance/latex_table_400.tex")
     assert(java.nio.file.Files.exists(path),
-      "missing committed fixture — regenerate with: sbt 'Test/runMain graft.ProbeMain latex'")
+      "missing committed fixture — regenerate with: sbt 'Test/runMain graft.Regen latex'")
     val want = java.nio.file.Files.readString(path)
     val metrics = spark.read.option("header", "true").option("inferSchema", "true")
       .csv("results/acceptance/metrics_csv")
@@ -81,7 +74,7 @@ class LatexReportSpec extends AnyFunSuite {
       val path = java.nio.file.Paths.get(s"results/sensitivity/${sc.label}/latex_table_400.tex")
       assert(java.nio.file.Files.exists(path),
         s"missing committed sensitivity fixture for ${sc.label} — regenerate " +
-          "with: sbt 'Test/runMain graft.ProbeMain latex'")
+          "with: sbt 'Test/runMain graft.Regen latex'")
       val want = java.nio.file.Files.readString(path)
       val metrics = spark.read.option("header", "true").option("inferSchema", "true")
         .csv(s"results/sensitivity/${sc.label}/metrics_csv")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.{LineDedupQueries, Scaffold}
@@ -10,13 +9,7 @@ import graft.sources.Tables
   * known drop sets, literal-vs-join route equality, normalization
   * classes, and layout invariance.
   */
-class LineDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LineDedupSpec extends AnyFunSuite with SparkTestSession {
 
   private def md5Hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
@@ -102,16 +95,13 @@ class LineDedupSpec extends AnyFunSuite {
       .filter(col("doc_id") >= minId && col("doc_id") < maxId)
       .select(col("doc_id"), Scaffold.linifiedText.as("text"))
 
-  private def tmpIndex(): String =
-    java.nio.file.Files.createTempDirectory("graft_lineidx").toString
-
   private def rowsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("n_lines"),
       r.getAs[Long]("n_dropped"), r.getAs[String]("kept_digest"),
       r.getAs[Double]("dropped_frac"))).sortBy(_._1).toSeq
 
   test("stored probe equals the full run's batch rows") {
-    val path = tmpIndex()
+    val path = tempDir("graft_lineidx")
     LineDedupQueries.initStoredLineIndex(spark, path, linified(250, 100000))
     val probe = LineDedupQueries.probeCleanBatch(spark, path, linified(0, 250))
     val full = LineDedupQueries.boilerplateLines(linified(0, 100000))
@@ -120,7 +110,7 @@ class LineDedupSpec extends AnyFunSuite {
   }
 
   test("append folds a batch in: day-2 probe equals the 3-way full run") {
-    val path = tmpIndex()
+    val path = tempDir("graft_lineidx")
     LineDedupQueries.initStoredLineIndex(spark, path, linified(300, 100000))
     LineDedupQueries.probeCleanBatch(spark, path, linified(150, 300)).count()
     LineDedupQueries.appendStoredLineIndex(spark, path, linified(150, 300))
@@ -132,7 +122,7 @@ class LineDedupSpec extends AnyFunSuite {
 
   test("compaction merges delta rows; probes identical across it; appends keep working") {
     import org.apache.spark.sql.functions.countDistinct
-    val path = tmpIndex()
+    val path = tempDir("graft_lineidx")
     LineDedupQueries.initStoredLineIndex(spark, path, linified(300, 100000))
     LineDedupQueries.appendStoredLineIndex(spark, path, linified(150, 300))
     val before = rowsOf(LineDedupQueries.probeCleanBatch(spark, path, linified(0, 150)))
@@ -155,7 +145,7 @@ class LineDedupSpec extends AnyFunSuite {
   }
 
   test("disjointness gate trips on an overlapping batch") {
-    val path = tmpIndex()
+    val path = tempDir("graft_lineidx")
     LineDedupQueries.initStoredLineIndex(spark, path, linified(250, 100000))
     intercept[IllegalArgumentException] {
       LineDedupQueries.probeCleanBatch(spark, path, linified(200, 300)).count()

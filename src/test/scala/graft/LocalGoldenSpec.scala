@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stats.{Battery, LocalBattery}
 
@@ -8,13 +7,7 @@ import graft.stats.{Battery, LocalBattery}
   * distributed one (example_estimates.csv on example_dat.csv), loading
   * rows in the reference's order.
   */
-class LocalGoldenSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LocalGoldenSpec extends AnyFunSuite with SparkTestSession {
 
   private val golden = GoldenValues.estimates
 

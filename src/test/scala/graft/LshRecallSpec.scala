@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{DedupQueries, VectorQueries}
 
@@ -13,13 +12,7 @@ import graft.operators.{DedupQueries, VectorQueries}
   * ADC shortlist (recall is shortlist-depth-bound: measured 0.65 at
   * depth 32, 0.96 at 128) and gates at 0.9; IVFADC 0.907 gates at 0.9.
   */
-class LshRecallSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class LshRecallSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{PipelineQueries, SampleQueries}
@@ -9,13 +8,7 @@ import graft.operators.{PipelineQueries, SampleQueries}
   * per-document decision lineage behind p1) and the c7 temperature
   * resampler (computed-rate multilingual rebalancing).
   */
-class ManifestResampleSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ManifestResampleSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 
@@ -74,7 +67,7 @@ class ManifestResampleSpec extends AnyFunSuite {
     val logical = rows(ReleaseWriter.manifestOf(released))
     assert(logical.nonEmpty, "empty release — test is vacuous")
 
-    val out = java.nio.file.Files.createTempDirectory("graft_rel_spec").toString + "/rel"
+    val out = tempDir("graft_rel_spec") + "/rel"
     val first = rows(ReleaseWriter.writeRelease(released, out))
     // the manifest comes from the WRITTEN files and equals the logical frame
     assert(first == logical)
@@ -102,7 +95,7 @@ class ManifestResampleSpec extends AnyFunSuite {
 
     val released = PipelineQueries.releasedDocs(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
-    val out = java.nio.file.Files.createTempDirectory("graft_relf_spec").toString + "/rel"
+    val out = tempDir("graft_relf_spec") + "/rel"
     // tiny target -> the rule forces a multi-file layout on this corpus
     ReleaseWriter.writeRelease(released, out, targetFileBytes = 64L << 10)
     val read = () => spark.read.parquet(out)
@@ -130,7 +123,7 @@ class ManifestResampleSpec extends AnyFunSuite {
     val victimPath = victimDir.toFile.listFiles()
       .find(f => f.getName.startsWith(ordinal + "-") && f.getName.endsWith(".parquet"))
       .get.toPath
-    val stage = java.nio.file.Files.createTempDirectory("graft_relf_tamper").toString
+    val stage = tempDir("graft_relf_tamper")
     val keep = spark.read.parquet(victimPath.toString)
     val minId = keep.agg(min("doc_id")).head().getLong(0)
     keep.filter(col("doc_id") =!= minId).coalesce(1)

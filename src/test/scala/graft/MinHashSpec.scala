@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.VectorExpressions.minhashK
@@ -9,13 +8,7 @@ import graft.functions.VectorExpressions.minhashK
   * form `array_min(transform(sh, x => xxhash64(lit(i), x)))` it replaced
   * (DedupQueries d2 relies on this to keep its round-1 output).
   */
-class MinHashSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MinHashSpec extends AnyFunSuite with SparkTestSession {
 
   test("MinHashK is bit-identical to the per-slot HOF formulation") {
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")

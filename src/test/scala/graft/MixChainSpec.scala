@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,13 +17,8 @@ import graft.operators.SampleQueries
   * degeneracy (cap is a no-op, every source trains one epoch).
   * Cross-engine agreement end-to-end is the c18 oracle row's job.
   */
-class MixChainSpec extends AnyFunSuite {
+class MixChainSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def docs(dir: String = "/root/testdata/sf0.001") =

@@ -1,7 +1,6 @@
 package graft
 
 import breeze.linalg.DenseVector
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stats.{Battery, Design, Estimators}
@@ -12,13 +11,7 @@ import graft.stats.{Battery, Design, Estimators}
   *    coefficients, finite SEs, and the first block on a per-study
   *    split equals the corresponding structure.
   */
-class MultiLevelPwclsSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class MultiLevelPwclsSpec extends AnyFunSuite with SparkTestSession {
 
   private lazy val panel = Battery.examplePanel(spark)
     .filter(col("user_id") <= 150 || (col("user_id") > 400 && col("user_id") <= 550))

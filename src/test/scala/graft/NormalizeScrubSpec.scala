@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextQueries
 
@@ -9,13 +8,7 @@ import graft.operators.TextQueries
   * collapse, trim, fixed pipeline order, idempotence, and the ASCII
   * fast path returning the input untouched.
   */
-class NormalizeScrubSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class NormalizeScrubSpec extends AnyFunSuite with SparkTestSession {
 
   private def cleanedOf(texts: String*): Seq[String] = {
     import spark.implicits._

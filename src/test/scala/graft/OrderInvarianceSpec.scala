@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.stats.Battery
@@ -9,13 +8,7 @@ import graft.stats.Battery
   * engine must be invariant to row order and partitioning because the
   * cluster key is derived from explicit (t, user_id), not layout.
   */
-class OrderInvarianceSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class OrderInvarianceSpec extends AnyFunSuite with SparkTestSession {
 
   test("block cluster: dense-id fast path matches the rank-table fallback") {
     import graft.stats.Estimators

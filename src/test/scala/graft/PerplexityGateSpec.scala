@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.TextQueries
@@ -13,13 +12,8 @@ import graft.operators.TextQueries
   * backoff branch scored a bigram, how ties at a cutoff land, that
   * non-reference docs never perturb the model).
   */
-class PerplexityGateSpec extends AnyFunSuite {
+class PerplexityGateSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def gate(rows: Seq[(Long, String, String)]) =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,18 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * is layout-invariant. The fingerprint's closed form is the oracle
   * row's job.
   */
-class PhashDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PhashDedupSpec extends AnyFunSuite with SparkTestSession {
 
   /** Write a documents.parquet-shaped corpus and run mm5 over it. */
   private def run(rows: Seq[(Long, String)]): Seq[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm5").toString
+    val dir = tempDir("graft_mm5")
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("s0"))
       .withColumn("n_chars", length(col("text")))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.PiiQueries
@@ -10,13 +9,7 @@ import graft.operators.PiiQueries
   * progressive-redaction overlap contract (a dotted quad inside an
   * email domain is ONE email), idempotence, and clean passthrough.
   */
-class PiiScrubSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PiiScrubSpec extends AnyFunSuite with SparkTestSession {
 
   private def scrub(rows: Seq[(Long, String)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression net: the properties that make the headline
@@ -9,13 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast, top-k as TakeOrderedAndProject, and NO cartesian product
   * anywhere in the relational/text/dedup/vector surface.
   */
-class PlanAuditSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,18 +10,12 @@ import graft.sources.Tables
   * init freezes the quantizers on the snapshot, append encodes later
   * increments with the stored books, probes see the grown corpus.
   */
-class PqAppendSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class PqAppendSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
   private def tmpPath(): String =
-    java.nio.file.Files.createTempDirectory("graft_pq_idx").toString + "/pq"
+    tempDir("graft_pq_idx") + "/pq"
 
   test("init on the full corpus + ivfAdcProbe equals the v7 query exactly") {
     val path = tmpPath()
@@ -96,7 +89,7 @@ class PqAppendSpec extends AnyFunSuite {
   test("the read-back memo never serves a stale index within one application") {
     // own source dir so the test can regenerate/append without touching
     // the shared fixtures
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_pq_memo").toString
+    val srcDir = tempDir("graft_pq_memo")
     val emb = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
     emb.filter(col("vec_id") >= 100).write.parquet(s"$srcDir/embeddings.parquet")
     val codes0 = VectorQueries.storedPqIndex(spark, srcDir).codes.count()

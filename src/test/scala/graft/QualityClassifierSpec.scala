@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ClassifierQueries
@@ -11,13 +10,7 @@ import graft.stats.Glm
   * (accuracy beats the majority-class baseline), probabilities are
   * proper, and the whole query is deterministic across runs.
   */
-class QualityClassifierSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityClassifierSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 
@@ -117,7 +110,7 @@ class QualityClassifierSpec extends AnyFunSuite {
     row.drop(2).map(_.toDouble).zip(stored).zipWithIndex.foreach {
       case ((c, s0), i) =>
         assert(closeCoef(c, s0), s"committed coef $i: $c != stored $s0 — rerun " +
-          "`Test/runMain graft.ProbeMain oraclefix` after an intentional change")
+          "`Test/runMain graft.Regen oraclefix` after an intentional change")
     }
   }
 }

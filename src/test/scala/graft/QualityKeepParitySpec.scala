@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.operators.TextQueries
   * turns on, the sub-2-token drop the battery expressed as a pre-filter
   * (subsumed by the 30-token word-count floor), and the real corpus.
   */
-class QualityKeepParitySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class QualityKeepParitySpec extends AnyFunSuite with SparkTestSession {
 
   /** The battery's keep set, computed exactly as the old funnel did. */
   private def batteryKeepIds(docs: org.apache.spark.sql.DataFrame): Set[Long] =

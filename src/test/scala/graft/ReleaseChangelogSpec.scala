@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.PipelineQueries
@@ -11,13 +10,7 @@ import graft.operators.PipelineQueries
   * PUBLISHED incremental versions equals the changelog of the logical
   * frames that were published.
   */
-class ReleaseChangelogSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleaseChangelogSpec extends AnyFunSuite with SparkTestSession {
 
   // artifact frames always carry lang (readVersion reads fullSchema —
   // null when the publisher had none), so the fixture models that; a
@@ -75,7 +68,7 @@ class ReleaseChangelogSpec extends AnyFunSuite {
   test("artifact round-trip: changelog of published versions equals the logical changelog") {
     val s = spark
     val dir = "/root/testdata/sf0.001"
-    val tmp = java.nio.file.Files.createTempDirectory("p11chlog").toString
+    val tmp = tempDir("p11chlog")
     val day1 = PipelineQueries.releasedDocsOf(
       graft.operators.Scaffold.previousSnapshot(graft.sources.Tables.documents(s, dir)))
     val day2 = PipelineQueries.releasedDocs(s, dir)

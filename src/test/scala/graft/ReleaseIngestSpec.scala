@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,13 +13,7 @@ import graft.sources.IncrementalRelease
   * caller, replay convergence (no version litter), and the rewound-
   * checkpoint fail-stop.
   */
-class ReleaseIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleaseIngestSpec extends AnyFunSuite with SparkTestSession {
 
   // a complete logical release frame: full release contract columns
   private def rel(rows: Seq[(Long, String, String)]): DataFrame = {
@@ -49,8 +43,7 @@ class ReleaseIngestSpec extends AnyFunSuite {
   test("streamed release lineage equals the hand-driven publish twin, replays converge, rewind fail-stops") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_stream_rel").toString
+    val tmp = tempDir("graft_stream_rel")
     val root = s"$tmp/stream"
 
     val src = MemoryStream[(Long, String, String)]

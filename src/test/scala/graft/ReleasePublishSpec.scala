@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.ReleaseWriter
 
@@ -9,13 +8,7 @@ import graft.sources.ReleaseWriter
   * release current and intact, republish must reproduce the manifest,
   * and retention must keep exactly one superseded release.
   */
-class ReleasePublishSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ReleasePublishSpec extends AnyFunSuite with SparkTestSession {
 
   private def docs(n: Int, tag: String = "") = {
     import spark.implicits._
@@ -25,7 +18,7 @@ class ReleasePublishSpec extends AnyFunSuite {
   }
 
   private def freshRoot() =
-    java.nio.file.Files.createTempDirectory("graft_relpub").toString + "/rel"
+    tempDir("graft_relpub") + "/rel"
 
   private def fs(root: String) = new org.apache.hadoop.fs.Path(root)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)

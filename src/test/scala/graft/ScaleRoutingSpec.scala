@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,13 +12,7 @@ import graft.harness.SimulationRunner
   * paths are the same math; cf. AwclsEquivalenceSpec, GoldenSpec ×
   * LocalGoldenSpec).
   */
-class ScaleRoutingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleRoutingSpec extends AnyFunSuite with SparkTestSession {
 
   test("oversized cells route distributed and match the local route") {
     val cell = Seq(SimulationRunner.Cell(30, 30))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.TextQueries
 
@@ -9,13 +8,7 @@ import graft.operators.TextQueries
   * the natural zh-over-ASCII mismatch, the mojibake (Cyrillic-dominant
   * Latin-tag) mismatch, and clean consistent rows.
   */
-class ScriptAuditSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScriptAuditSpec extends AnyFunSuite with SparkTestSession {
 
   private def audit(rows: (Long, String, String)*) = {
     import spark.implicits._

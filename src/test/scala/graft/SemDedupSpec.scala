@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.VectorQueries
@@ -13,13 +12,7 @@ import graft.operators.VectorQueries
   * the oversized-list guard keeps every comparison group under the cap
   * on a maximally skewed corpus.
   */
-class SemDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SemDedupSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 

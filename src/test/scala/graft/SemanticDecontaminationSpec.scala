@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.ContaminationQueries
@@ -13,13 +12,8 @@ import graft.operators.ContaminationQueries
   * ties elect the smallest train id. Cross-engine agreement on real
   * data is the oracle row's job.
   */
-class SemanticDecontaminationSpec extends AnyFunSuite {
+class SemanticDecontaminationSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def unit(xs: Double*): Array[Float] = {

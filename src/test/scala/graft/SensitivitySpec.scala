@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.harness.{SensitivityGrid, SimulationRunner}
@@ -14,13 +13,7 @@ import graft.harness.{SensitivityGrid, SimulationRunner}
   * intercept absorbs the unmodeled curvature. Regenerate with
   * `runMain graft.harness.SensitivityGrid`.
   */
-class SensitivitySpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SensitivitySpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "results/sensitivity"
 

@@ -10,13 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * against the pre-existing session state so the spec composes with
   * other suites sharing the session (e.g. streaming memory sinks).
   */
-class SessionHygieneSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SessionHygieneSpec extends AnyFunSuite with SparkTestSession {
 
   test("stateful queries leave no temp views or cache entries behind") {
     val dir = "/root/testdata/sf0.001"

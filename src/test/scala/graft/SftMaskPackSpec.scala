@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,8 @@ import graft.operators.TextQueries
   * prompt-boundary column, and layout invariance. Cross-engine
   * agreement of the full pipeline is the oracle row's job.
   */
-class SftMaskPackSpec extends AnyFunSuite {
+class SftMaskPackSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private val quarter = floor((col("n_tokens") + lit(3)) / lit(4)).cast("long")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -10,13 +10,8 @@ import graft.operators.{PipelineQueries, TextQueries}
   * standalone t25 accounting over the gated subset, gate semantics,
   * conservation bounds, layout invariance.
   */
-class SftReleaseSpec extends AnyFunSuite {
+class SftReleaseSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   // texts spanning the quality gate: the 'the/a/and' stopword mass and

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SampleQueries
@@ -11,13 +10,7 @@ import graft.operators.SampleQueries
   * any input partitioning), and shards are balanced within binomial
   * bounds.
   */
-class ShardShuffleSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ShardShuffleSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
   private lazy val docs = graft.sources.Tables.documents(spark, dir)

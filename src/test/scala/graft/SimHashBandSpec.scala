@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,13 +14,7 @@ import graft.operators.DedupQueries
   * pigeonhole admits no misses), including pairs at Hamming 4–6 that
   * the former 4×16 geometry could drop.
   */
-class SimHashBandSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SimHashBandSpec extends AnyFunSuite with SparkTestSession {
 
   private def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long)] =
     df.select("a", "b", "hamming").collect()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SampleQueries
 
@@ -9,13 +8,7 @@ import graft.operators.SampleQueries
   * reconstruction property the audit exists for (yesterday + diff
   * accounts for today, row for row).
   */
-class SnapshotDiffSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SnapshotDiffSpec extends AnyFunSuite with SparkTestSession {
 
   private def diff(old: Seq[(Long, String, String)], nw: Seq[(Long, String, String)]) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.PipelineQueries
@@ -11,13 +10,7 @@ import graft.operators.PipelineQueries
   * scope, and a clean release yields the empty audit (the
   * clean-release certificate).
   */
-class SplitLeakageSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SplitLeakageSpec extends AnyFunSuite with SparkTestSession {
 
   private def audit(rows: Seq[(Long, String, String)], dfCap: Long = 32) = {
     import spark.implicits._

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,16 +8,11 @@ import graft.functions.{GraftFunctions, VectorExpressions}
 /** The native expressions must be reachable from plain SQL with results
   * identical to the column API (same Expression classes underneath).
   */
-class SqlFunctionsSpec extends AnyFunSuite {
+class SqlFunctionsSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftFunctions.register(s)
-    s
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    GraftFunctions.register(spark)
   }
 
   test("dot_product / simhash64 / minhash_k work from spark.sql") {

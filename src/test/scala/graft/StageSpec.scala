@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.DedupQueries
@@ -12,13 +11,7 @@ import graft.operators.DedupQueries
   * .staged three times: gram frame, memo entry, and — via clustering —
   * the CC rounds).
   */
-class StageSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StageSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.001"
 
@@ -26,7 +19,7 @@ class StageSpec extends AnyFunSuite {
     DedupQueries.clearPairsMemo()
     val localMode = DedupQueries.dMinHash.fn(spark, dir).collect().toSeq
 
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
+    val ckptDir = tempDir("graft_ckpt")
     spark.sparkContext.setCheckpointDir(ckptDir)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {
@@ -50,7 +43,7 @@ class StageSpec extends AnyFunSuite {
     // silent-disk-leak deployment Stage must flag (VERDICT r7 #6)
     assert(!graft.plans.Stage.reliableGcConfigured(spark))
 
-    val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt_leak").toString
+    val ckptDir = tempDir("graft_ckpt_leak")
     spark.sparkContext.setCheckpointDir(ckptDir)
     spark.conf.set("spark.graft.reliableCheckpoint", "true")
     try {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +12,8 @@ import graft.operators.DedupQueries
   * incremental contract applied to exact-substring dedup. Plus the
   * loud-failure gates (geometry mismatch, id overlap).
   */
-class StoredSubstrSpec extends AnyFunSuite {
+class StoredSubstrSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private val k = 50
@@ -47,8 +42,7 @@ class StoredSubstrSpec extends AnyFunSuite {
     rows(DedupQueries.dupSubstringsOf(all, k)).filter(r => batchIds(r._1))
 
   test("init -> probe -> append -> probe equals the full run at every step") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_substr_idx").toString + "/idx"
+    val path = tempDir("graft_substr_idx") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
     // day 1: cross corpus/batch dup (shared) AND intra-batch dup (shared2)
     val p1 = rows(DedupQueries.probeStoredSubstrIndex(spark, path, day1, k))
@@ -64,8 +58,7 @@ class StoredSubstrSpec extends AnyFunSuite {
   }
 
   test("probe at the wrong k fails loudly (geometry stamp)") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_substr_geo").toString + "/idx"
+    val path = tempDir("graft_substr_geo") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
     val e = intercept[IllegalArgumentException] {
       DedupQueries.probeStoredSubstrIndex(spark, path, day1, k = 8)
@@ -74,8 +67,7 @@ class StoredSubstrSpec extends AnyFunSuite {
   }
 
   test("overlapping doc_ids fail loudly on probe and append") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_substr_overlap").toString + "/idx"
+    val path = tempDir("graft_substr_overlap") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
     val clash = Seq((100L, uniq("x", 60).mkString(" "))).toDF("doc_id", "text")
     val e1 = intercept[IllegalArgumentException] {
@@ -90,8 +82,7 @@ class StoredSubstrSpec extends AnyFunSuite {
 
   test("compaction merges delta counts to one row per hash; probes identical across it") {
     import org.apache.spark.sql.functions.countDistinct
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_substr_compact").toString + "/idx"
+    val path = tempDir("graft_substr_compact") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
     DedupQueries.appendStoredSubstrIndex(spark, path, day1, k)
     // day2's doc 11 duplicates shared2 ONLY via day1's append — the
@@ -119,8 +110,7 @@ class StoredSubstrSpec extends AnyFunSuite {
   }
 
   test("all-short and empty batches probe to zero rows") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_substr_empty").toString + "/idx"
+    val path = tempDir("graft_substr_empty") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
     val short = Seq((5L, "one two three")).toDF("doc_id", "text")
     assert(DedupQueries.probeStoredSubstrIndex(spark, path, short, k).count() == 0L)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,17 +12,11 @@ import graft.operators.SampleQueries
   * branch fires), mid strata (p = 1, no pre-filtering), and large
   * strata (p ≪ 1, pre-filter active).
   */
-class StratifiedSampleSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StratifiedSampleSpec extends AnyFunSuite with SparkTestSession {
 
   test("two-phase sample equals naive window on a skewed corpus; both branches taken") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_c4").toString
+    val tmp = tempDir("graft_c4")
     // srcA: 4 docs (< n=10 → survivors < n → unfiltered fallback branch)
     // srcB: 30 docs (p = 40/30 → 1, every row survives, okS branch)
     // srcC: 600 docs (p = 40/600 ≈ 0.067 → pre-filter really prunes)

@@ -2,20 +2,13 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.EventStreams
 import graft.streaming.EventStreams.Event
 
-class StreamingSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class StreamingSpec extends AnyFunSuite with SparkTestSession {
 
   private def ts(min: Int): Timestamp = new Timestamp(1700000000000L + min * 60000L)
 
@@ -237,8 +230,7 @@ class StreamingSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getAs[Double]("jaccard"))).toSeq
 
     // index the initial corpus snapshot (ids >= 100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_idx").toString + "/minhash"
+    val path = tempDir("graft_stream_idx") + "/minhash"
     DedupQueries.initStoredIndex(spark, path, docs.filter(col("doc_id") >= 100))
 
     // stream two document micro-batches: ids 50..99, then 25..49
@@ -332,8 +324,7 @@ class StreamingSpec extends AnyFunSuite {
     def fullRestricted(all: org.apache.spark.sql.DataFrame, ids: Set[Long]) =
       spanRows(DedupQueries.dupSubstringsOf(all, k)).filter(r => ids(r._1))
 
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_substr").toString + "/idx"
+    val path = tempDir("graft_stream_substr") + "/idx"
     DedupQueries.initStoredSubstrIndex(spark, path, corpusDf, k)
 
     val src = MemoryStream[(Long, String)]
@@ -414,8 +405,7 @@ class StreamingSpec extends AnyFunSuite {
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
 
     // index the initial corpus snapshot (ids >= 100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_span").toString + "/spans"
+    val path = tempDir("graft_stream_span") + "/spans"
     DedupQueries.initStoredSpanIndex(spark, path, docs.filter(col("doc_id") >= 100))
 
     // stream two micro-batches: ids 50..99, then 25..49
@@ -486,7 +476,7 @@ class StreamingSpec extends AnyFunSuite {
 
     // the streamed index and a batch-maintained twin start from the
     // same catalog snapshot (ids >= 300)
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_pq").toString
+    val base = tempDir("graft_stream_pq")
     val (path, twin) = (base + "/pq", base + "/pq_twin")
     for (p <- Seq(path, twin))
       VectorQueries.initStoredPqIndex(spark, p, emb.filter(col("vec_id") >= 300))
@@ -553,8 +543,7 @@ class StreamingSpec extends AnyFunSuite {
         r.getDouble(3))).toSeq
 
     // index the benchmark set (the x2 eval predicate)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_scrub_idx").toString + "/evalgrams"
+    val path = tempDir("graft_scrub_idx") + "/evalgrams"
     ContaminationQueries.initStoredEvalIndex(
       spark, path, docs.filter(col("doc_id") % 37 === 0))
 
@@ -602,7 +591,7 @@ class StreamingSpec extends AnyFunSuite {
       df.orderBy("yr", "qtr").collect().map(_.toSeq).toSeq
 
     // streamed table and batch twin start from the same history snapshot
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_sk").toString
+    val base = tempDir("graft_stream_sk")
     val (path, twin) = (base + "/hll", base + "/hll_twin")
     val snapshot = orders.filter(year(col("o_orderdate")) <= 1996)
     val batch1 = orders.filter(year(col("o_orderdate")) === 1997)
@@ -686,8 +675,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.streaming.StreamIdentity
     val docs = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
       .select("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_incarnation").toString + "/minhash"
+    val path = tempDir("graft_incarnation") + "/minhash"
     DedupQueries.initStoredIndex(spark, path, docs.filter(col("doc_id") >= 100))
 
     // incarnation A commits its batch 0 (what the old un-namespaced

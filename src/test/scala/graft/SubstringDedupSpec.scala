@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,13 +18,8 @@ import graft.operators.DedupQueries
   * any-position (intra-doc repeats count — ExactSubstr semantics).
   * Cross-engine agreement of the intervals is the oracle row's job.
   */
-class SubstringDedupSpec extends AnyFunSuite {
+class SubstringDedupSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private val k = 50

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.harness.{FigureFrames, SvgFigures}
@@ -8,23 +7,17 @@ import graft.harness.{FigureFrames, SvgFigures}
 /** The rendered SVG figures are the engine's own output: the committed
   * files under `results/figures/` must be byte-identical to what SvgFigures
   * re-renders from the committed figure frames / per-rep checkpoints
-  * (regenerate with `Test/runMain graft.ProbeMain figures`), and the
+  * (regenerate with `Test/runMain graft.Regen figures`), and the
   * drawings must carry the reference's structure — one series per
   * plotted method per panel, one box per (coefficient, method), the
   * reference's palette.
   */
-class SvgFiguresSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class SvgFiguresSpec extends AnyFunSuite with SparkTestSession {
 
   private def requireArtifact(path: String): Unit =
     if (!new java.io.File(path).exists()) {
       val msg = s"committed artifact missing ($path); regenerate with: " +
-        "sbt 'Test/runMain graft.ProbeMain figures'"
+        "sbt 'Test/runMain graft.Regen figures'"
       if (sys.env.contains("GRAFT_ALLOW_MISSING_ACCEPTANCE"))
         assume(false, s"$msg — skipped via GRAFT_ALLOW_MISSING_ACCEPTANCE")
       else fail(msg)
@@ -46,7 +39,7 @@ class SvgFiguresSpec extends AnyFunSuite {
       java.nio.file.Paths.get("results/figures/sample_size_se.svg"))
     assert(svg == committed,
       "committed sample_size_se.svg drifted from the committed frame — " +
-        "regenerate with ProbeMain figures if the change is intentional")
+        "regenerate with Regen figures if the change is intentional")
     // 4 panels × 5 methods = 20 polylines; 5 points each = 100 markers
     assert(count(svg, "<polyline ") == 20)
     assert(count(svg, "<circle ") == 100)
@@ -66,7 +59,7 @@ class SvgFiguresSpec extends AnyFunSuite {
       java.nio.file.Paths.get("results/figures/estimates_400_400.svg"))
     assert(svg == committed,
       "committed estimates_400_400.svg drifted from the committed cell — " +
-        "regenerate with ProbeMain figures if the change is intentional")
+        "regenerate with Regen figures if the change is intentional")
     // 18 boxes (9 methods × 2 groups) + 18 legend swatches + 2 canvas rects
     assert(count(svg, "<rect ") == 18 + 9 + 2)
     // each box has a median line + 2 whiskers; plus the y=0 reference

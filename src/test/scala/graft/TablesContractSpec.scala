@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,13 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * encoding flipped and the read was not normalized — this spec fails
   * loudly at `sbt test` time instead.
   */
-class TablesContractSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TablesContractSpec extends AnyFunSuite with SparkTestSession {
 
   test("events.ts normalizes to nanos-since-epoch LONG at every sf") {
     for (sf <- Seq("sf0.001", "sf0.01")) {
@@ -84,7 +77,7 @@ class TablesContractSpec extends AnyFunSuite {
   }
 
   test("documentsJsonl round-trips the documents contract and derives a missing n_chars") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
+    val dir = tempDir("graft_jsonl")
     val src = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     // full-contract round trip: parquet corpus -> jsonl -> ingest
     src.coalesce(1).write.mode("overwrite").json(s"$dir/full")
@@ -103,7 +96,7 @@ class TablesContractSpec extends AnyFunSuite {
   }
 
   test("documentsJsonl fails loudly on a malformed line instead of decoding null rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_bad").toString
+    val dir = tempDir("graft_jsonl_bad")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/part.jsonl"),
       """{"doc_id": 1, "text": "fine", "lang": "en", "source": "s"}
         |{"doc_id": 2, "text": "truncated""".stripMargin)
@@ -121,7 +114,7 @@ class TablesContractSpec extends AnyFunSuite {
     // consuming action is collect(), not count(): a bare count prunes
     // every column including the guard (the documented honest-scope
     // caveat — guards fire where the guarded column is read)
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl_key").toString
+    val dir = tempDir("graft_jsonl_key")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/part.jsonl"),
       """{"doc_id": 1, "text": "fine", "lang": "en", "source": "s"}
         |{"text": "no id here", "lang": "en", "source": "s"}""".stripMargin)
@@ -130,7 +123,7 @@ class TablesContractSpec extends AnyFunSuite {
     }
     assert(String.valueOf(exId.getMessage).contains("doc_id") ||
       String.valueOf(exId.getCause).contains("doc_id"))
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_jsonl_key2").toString
+    val dir2 = tempDir("graft_jsonl_key2")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir2/part.jsonl"),
       """{"doc_id": 1, "lang": "en", "source": "s"}""")
     val exText = intercept[Exception] {
@@ -139,7 +132,7 @@ class TablesContractSpec extends AnyFunSuite {
     assert(String.valueOf(exText.getMessage).contains("text") ||
       String.valueOf(exText.getCause).contains("text"))
     // an explicit null is the same violation as a missing key
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_jsonl_key3").toString
+    val dir3 = tempDir("graft_jsonl_key3")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir3/part.jsonl"),
       """{"doc_id": null, "text": "x", "lang": "en", "source": "s"}""")
     intercept[Exception] {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,13 +9,7 @@ import graft.operators.SampleQueries
   * naive global-window formulation row for row, respect the budget,
   * and be maximal (the next-best excluded doc would overflow it).
   */
-class TokenBudgetSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenBudgetSpec extends AnyFunSuite with SparkTestSession {
 
   // 15k tokens ≈ half the sf0.01 corpus — selection is non-trivial
   private val dir = "/root/testdata/sf0.01"

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,13 +15,7 @@ import graft.sources.TokenizerInterchange
   * The committed sample (`results/tokenizer_bpe.json`) is pinned
   * against a fresh export of the sf0.01 snapshot's stored table.
   */
-class TokenizerInterchangeSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class TokenizerInterchangeSpec extends AnyFunSuite with SparkTestSession {
 
   private val dir = "/root/testdata/sf0.01"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.UrlQueries
@@ -11,13 +10,7 @@ import graft.operators.UrlQueries
   * preserved, schemes not folded, root slash kept), idempotence, and
   * the min-doc_id keep election.
   */
-class UrlDedupSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlDedupSpec extends AnyFunSuite with SparkTestSession {
 
   private def canon(urls: String*): Seq[String] = {
     import spark.implicits._
@@ -101,7 +94,7 @@ class UrlDedupSpec extends AnyFunSuite {
 
   test("stored probe: three-way verdicts match the stored/first-crawled-wins contract") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("d14bidx").toString
+    val tmp = tempDir("d14bidx")
     val corpus = Seq(
       (100L, "https://ex.com/p/1"),
       (101L, "https://ex.com/p/2"))
@@ -123,7 +116,7 @@ class UrlDedupSpec extends AnyFunSuite {
 
   test("stored probe equals the full-run election restricted to the batch (corpus precedence)") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("d14bfull").toString
+    val tmp = tempDir("d14bfull")
     // ids chosen so corpus ids are LARGER than batch ids — the full-run
     // min election and the first-crawled-wins probe disagree on raw
     // min, so the test pins the intended semantics: stored keeper wins

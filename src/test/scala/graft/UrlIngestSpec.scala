@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.UrlQueries
@@ -11,13 +10,7 @@ import graft.operators.UrlQueries
   * election ≡ first-crawled-wins), crash/replay convergence of the
   * tagged append, and the genuine-duplicate fail-stop.
   */
-class UrlIngestSpec extends AnyFunSuite {
-
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class UrlIngestSpec extends AnyFunSuite with SparkTestSession {
 
   private def verdictRows(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq.sorted
@@ -34,8 +27,7 @@ class UrlIngestSpec extends AnyFunSuite {
     val b2 = Seq(
       (21L, "https://new.com/x#f"),              // dup ONLY against folded batch 1
       (22L, "https://fresh.org/q"))              // unique
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_stream_url").toString + "/idx"
+    val path = tempDir("graft_stream_url") + "/idx"
     UrlQueries.initStoredUrlIndex(spark, path, corpus)
 
     val src = MemoryStream[(Long, String)]
@@ -68,8 +60,7 @@ class UrlIngestSpec extends AnyFunSuite {
       (33L, "https://never.seen/y")).toDF("doc_id", "url")
     def probeNow() = verdictRows(UrlQueries.probeUrlBatch(spark, path, heldOut))
     val streamed = probeNow()
-    val rebuilt = java.nio.file.Files
-      .createTempDirectory("graft_url_rebuild").toString + "/idx"
+    val rebuilt = tempDir("graft_url_rebuild") + "/idx"
     UrlQueries.initStoredUrlIndex(spark, rebuilt,
       corpus.unionByName(b1.toDF("doc_id", "url")).unionByName(b2.toDF("doc_id", "url")))
     assert(streamed == verdictRows(UrlQueries.probeUrlBatch(spark, rebuilt, heldOut)))

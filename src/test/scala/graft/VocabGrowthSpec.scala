@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,8 @@ import graft.operators.TextQueries
   * counts, full prefix = whole corpus), content-keyed membership
   * (increment-stable), layout invariance.
   */
-class VocabGrowthSpec extends AnyFunSuite {
+class VocabGrowthSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   private def docsOf(rows: Seq[(Long, String)]): DataFrame =

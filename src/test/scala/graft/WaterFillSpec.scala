@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,13 +11,8 @@ import graft.operators.SampleQueries
   * |sources|), quota ≤ availability, all-saturated degenerate case,
   * layout invariance.
   */
-class WaterFillSpec extends AnyFunSuite {
+class WaterFillSpec extends AnyFunSuite with SparkTestSession {
 
-  private lazy val spark = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
   import spark.implicits._
 
   /** one doc per (source, tokens) pair with exactly n tokens */
