@@ -2,17 +2,22 @@ package graft.gen
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Seeded synthetic MRT panel generator (reference: generate_data.R:2-94,
-  * SURVEY.md §2.2 G1-G6) as pure Catalyst expressions over spark.range.
+  * SURVEY.md §2.2 G1-G6) over spark.range.
   *
   * RNG is COUNTER-BASED and keyed by (seed, stream, user, t): every draw
   * is a pure function of its key via xxhash64, so results are invariant
   * to partitioning and row order (SURVEY.md §7.4.1 — Spark's rand(seed)
-  * is partition-dependent and unacceptable here). The AR(1) recursion is
-  * unrolled into a closed-form weighted sum of the per-step innovations,
-  * so each row is computed independently — no sequential scan, no
-  * cross-row dependency, embarrassingly parallel at any scale.
+  * is partition-dependent and unacceptable here). The draws — uniforms,
+  * Student-t noise and the AR(1) covariate and error processes — come
+  * from one native Catalyst expression, [[PanelDraw]], whose static
+  * kernel both codegen and interpreted evaluation call; the rest of the
+  * DGP (the x2/x3/propensity/outcome formulas) is plain column
+  * arithmetic over those draws. The AR(1) value at t is a weighted sum
+  * of its own keyed innovations, so no row reads another: the generator
+  * is one shuffle-free codegen stage at any scale.
   *
   * The R stream itself is not reproducible on the JVM (SURVEY.md §5.2):
   * this generator matches the reference's DISTRIBUTIONS; cross-
@@ -20,42 +25,11 @@ import org.apache.spark.sql.functions._
   */
 object PanelGenerator {
 
+  import PanelDraw.{Ar1, StudentT, Unif}
+
   final case class Config(
       tMax: Int = 20, dof: Int = 10, nInternal: Int = 100, nExternal: Int = 100,
       arParam: Double = 0.5, x2Coef: Double = -3.0, x21sqCoef: Double = 0.0)
-
-  /** U(0,1) strictly inside (0,1), from a 64-bit counter hash. */
-  private def unif(seed: Column, stream: Column, user: Column, t: Column, k: Int): Column = {
-    val h = xxhash64(seed, stream, user, t, lit(k))
-    (call_function("shiftrightunsigned", h, lit(11)).cast("double") + 0.5) / lit(9007199254740992.0) // 2^53
-  }
-
-  /** Standard normal via Box-Muller on two counter-uniforms. */
-  private def normal(seed: Column, stream: Column, user: Column, t: Column, k: Int): Column =
-    sqrt(lit(-2.0) * log(unif(seed, stream, user, t, 2 * k))) *
-      cos(lit(2.0 * math.Pi) * unif(seed, stream, user, t, 2 * k + 1))
-
-  /** Student-t(dof) as z0 / sqrt(chi²_dof / dof) from dof+1 normals. */
-  private def studentT(seed: Column, stream: Column, user: Column, t: Column, dof: Int): Column = {
-    val z0 = normal(seed, stream, user, t, 0)
-    val chi2 = (1 to dof).map(j => { val z = normal(seed, stream, user, t, j); z * z })
-      .reduce(_ + _)
-    z0 / sqrt(chi2 / lit(dof.toDouble))
-  }
-
-  /** Stationary AR(1) at time t, closed form:
-    * x_t = ar^t·x₀ + Σ_{j=1..t} ar^(t-j)·e_j, x₀ ~ N(0, 1/(1-ar²)).
-    * Each term keyed independently — O(t) hashes per row, zero shuffle.
-    */
-  private def ar1(seed: Column, stream: Column, user: Column, t: Column, ar: Double): Column = {
-    val x0 = normal(seed, stream, user, lit(0), 0) / lit(math.sqrt(1.0 - ar * ar))
-    val innov = aggregate(
-      sequence(lit(1), t),
-      lit(0.0),
-      (acc, j) => acc * lit(ar) + normal(seed, stream, user, j, 0))
-    // Horner over j ascending: acc = Σ ar^(t-j) e_j  (e_t gets weight 1)
-    pow(lit(ar), t.cast("double")) * x0 + innov
-  }
 
   /** Generate the panel: one row per (user_id 1..n, t 1..tMax), schema
     * matching FIXTURES.md §A1 plus explicit `t` (+ seed for lineage). */
@@ -89,30 +63,31 @@ object PanelGenerator {
   }
 
   private def withPanelColumns(base: DataFrame, sc: Column, cfg: Config): DataFrame = {
-    val u = col("user_id"); val t = col("t")
+    val Seq(seed, user, t) = Seq(sc, col("user_id"), col("t")).map(Bridge.toExpression)
+    def draw(stream: String, d: PanelDraw.Draw): Column =
+      Bridge.toColumn(PanelDraw(seed, user, t, stream, d))
 
-    val isInt = u <= cfg.nInternal
-    val x1 = ar1(sc, lit("x1"), u, t, cfg.arParam)
+    val isInt = col("user_id") <= cfg.nInternal
     val df1 = base
       .withColumn("is_internal", isInt)
       .withColumn("is_external", !isInt)
-      .withColumn("x1", x1)
+      .withColumn("x1", draw("x1", Ar1(cfg.arParam)))
     val x2 = when(col("is_internal"),
         lit(1.0) - col("x1") + lit(cfg.x21sqCoef) * col("x1") * col("x1") +
-          lit(3.0) * studentT(sc, lit("x2i"), u, t, cfg.dof))
-      .otherwise(lit(2.7) * studentT(sc, lit("x2e"), u, t, cfg.dof))
+          lit(3.0) * draw("x2i", StudentT(cfg.dof)))
+      .otherwise(lit(2.7) * draw("x2e", StudentT(cfg.dof)))
     val df2 = df1.withColumn("x2", x2)
       .withColumn("x3",
         lit(-1.0) + lit(0.5) * col("x1") - lit(0.8) * col("x2") +
-          studentT(sc, lit("x3"), u, t, cfg.dof))
+          draw("x3", StudentT(cfg.dof)))
     val pH = lit(1.0) / (lit(1.0) + exp(
       lit(0.2) + lit(0.3) * col("is_internal").cast("double") +
         lit(0.05) * col("x1") - lit(0.03) * col("x2") + lit(0.06) * col("x3")))
     val df3 = df2.withColumn("p_h", pH)
-      .withColumn("a_logical", unif(sc, lit("a"), u, t, 0) < col("p_h"))
+      .withColumn("a_logical", draw("a", Unif(0)) < col("p_h"))
       .withColumn("a", col("a_logical").cast("double"))
       .withColumn("p_h_a", col("a") * col("p_h") + (lit(1.0) - col("a")) * (lit(1.0) - col("p_h")))
-      .withColumn("epsilon", ar1(sc, lit("eps"), u, t, cfg.arParam))
+      .withColumn("epsilon", draw("eps", Ar1(cfg.arParam)))
       .withColumn("treatment_effect",
         lit(1.0) + lit(2.0) * col("x1") + lit(cfg.x2Coef) * col("x2"))
     df3.withColumn("y",

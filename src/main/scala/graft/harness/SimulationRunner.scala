@@ -1,5 +1,7 @@
 package graft.harness
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -13,9 +15,11 @@ import graft.stats.LocalBattery
   *  1. every (cell, replication) panel is generated as one partitioned
   *     DataFrame from the counter-based generator (no driver loop over
   *     reps; generation is pure expressions),
-  *  2. the estimator battery runs INSIDE executors per (cell, rep) via
-  *     groupByKey.flatMapGroups + LocalBattery (52,000 small fits is
-  *     replication-parallel work, not row-parallel work — SURVEY §3.3),
+  *  2. the estimator battery runs INSIDE executors per (cell, rep):
+  *     the panel is repartitioned by replication, sorted within each
+  *     partition, and each replication's rows are fitted by LocalBattery
+  *     in turn (52,000 small fits is replication-parallel work, not
+  *     row-parallel work — SURVEY §3.3),
   *  3. the A5 metric reduction (bias / empirical SE / relative
   *     efficiency / rMSE / coverage / warning counts) is a plain
   *     groupBy().agg() + a window for the vs-baseline ratio (A8).
@@ -27,13 +31,18 @@ object SimulationRunner {
   val coefNames: Seq[String] = Seq("Intercept", "Slope")
   val betaRTrue: Array[Double] = Array(-2.0, 5.0)
 
+  /** One panel row on the local route: (n_internal, n_external,
+    * replication, y, a, x1, x2, x3, p_h, p_h_a, is_internal, user_id, t). */
+  private type PanelRow =
+    (Int, Int, Int, Double, Double, Double, Double, Double, Double, Double, Boolean, Long, Int)
+
   /** Per-replication long-format results:
     * (n_internal, n_external, replication, method, coef, estimate, se,
     *  covered, tilt_warning).
     *
     * Scale guard: cells whose per-rep panel fits comfortably in one
     * executor task (≤ maxLocalRows rows) run replication-parallel via
-    * flatMapGroups + LocalBattery; bigger cells would OOM a task
+    * LocalBattery; bigger cells would OOM a task
     * materializing the panel, so they route rep-by-rep through the
     * DISTRIBUTED Estimators battery (rows-parallel — the same math, the
     * other execution path; ScaleRoutingSpec pins route equivalence).
@@ -74,10 +83,10 @@ object SimulationRunner {
         .withColumn("n_external", lit(cell.nExternal))
     }.reduce(_ unionByName _)
 
-    // Materialize the generated panel ONCE (localCheckpoint truncates the
-    // lineage) so the battery stage — and every downstream action — ships
-    // a tiny task binary instead of re-planning/re-broadcasting the
-    // generator expression tree per job (VERDICT r1 "what's wrong" #5).
+    // Generation is its own job: the panel is materialized once
+    // (localCheckpoint) and the battery stage reads it back, so a failed
+    // battery task does not regenerate it, and perfbench's `gen` layer
+    // finds the generation time by this job's call site.
     val slim = panels.select(
       $"n_internal", $"n_external", $"replication",
       $"y", $"a", $"x1", $"x2", $"x3", $"p_h", $"p_h_a", $"is_internal",
@@ -86,37 +95,59 @@ object SimulationRunner {
 
     val methodsB = spark.sparkContext.broadcast(methods)
     val truth = truthVals
+    // A partition count set here is one adaptive execution keeps: left to
+    // a key-grouping shuffle, AQE coalesced every cell's few-MB battery
+    // input into ONE task and fitted its replications one after another.
+    val keys = Seq($"n_internal", $"n_external", $"replication")
+    val nTasks = math.min(cells.size * nReps, spark.sparkContext.defaultParallelism)
 
     slim
-      .as[(Int, Int, Int, Double, Double, Double, Double, Double, Double, Double, Boolean, Long, Int)]
-      .groupByKey { case (ni, ne, rep, _, _, _, _, _, _, _, _, _, _) => (ni, ne, rep) }
-      .flatMapGroups { (key: (Int, Int, Int), it: Iterator[(Int, Int, Int, Double, Double, Double, Double, Double, Double, Double, Boolean, Long, Int)]) =>
-        val (ni, ne, rep) = key
-        // R layout order: user-fastest within each t (generate_data.R:77-93)
-        val rows = it.toArray.sortBy(r => (r._13, r._12))
-        val panel = LocalBattery.Panel(
-          rows.map(_._4), rows.map(_._5), rows.map(_._6), rows.map(_._7), rows.map(_._8),
-          rows.map(_._9), rows.map(_._10), rows.map(_._11), rows.map(_._12))
-        val n = rows.length
-        methodsB.value.iterator.flatMap { m =>
-          try {
-            val r = LocalBattery.run(m, panel)
-            val dof = n - r.betaR.length
-            val tCrit = new org.apache.commons.math3.distribution.TDistribution(dof.toDouble)
-              .inverseCumulativeProbability(0.975)
-            coefNames.indices.map { i =>
-              val covered = math.abs(r.betaR(i) - truth(i)) <= tCrit * r.seBetaR(i)
-              (ni, ne, rep, m, coefNames(i), r.betaR(i), r.seBetaR(i), covered, r.tiltWarning)
-            }
-          } catch {
-            // degenerate replication (singular fit): skip, like an errored
-            // R rep — but NEVER swallow fatal errors (OOM, interrupts)
-            case scala.util.control.NonFatal(_) => Seq.empty
-          }
+      .repartition(nTasks, keys: _*)
+      // R layout order within a replication: user-fastest within each t
+      // (generate_data.R:77-93)
+      .sortWithinPartitions(keys :+ $"t" :+ $"user_id": _*)
+      .as[PanelRow]
+      .mapPartitions { it =>
+        // one replication's rows at a time: a task holds one panel
+        val in = it.buffered
+        Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+          val (ni, ne, rep) = (in.head._1, in.head._2, in.head._3)
+          val rows = mutable.ArrayBuilder.make[PanelRow]
+          while (in.hasNext && in.head._1 == ni && in.head._2 == ne && in.head._3 == rep)
+            rows += in.next()
+          battery(ni, ne, rep, rows.result(), methodsB.value, truth)
         }
       }
       .toDF("n_internal", "n_external", "replication", "method", "coef",
         "estimate", "se", "covered", "tilt_warning")
+  }
+
+  /** Every method on one replication's rows (in R layout order), as
+    * result rows; a degenerate fit leaves no rows. */
+  private def battery(ni: Int, ne: Int, rep: Int,
+                      rows: Array[PanelRow],
+                      methods: Seq[String], truth: Array[Double])
+      : Iterator[(Int, Int, Int, String, String, Double, Double, Boolean, Boolean)] = {
+    val panel = LocalBattery.Panel(
+      rows.map(_._4), rows.map(_._5), rows.map(_._6), rows.map(_._7), rows.map(_._8),
+      rows.map(_._9), rows.map(_._10), rows.map(_._11), rows.map(_._12))
+    val n = rows.length
+    methods.iterator.flatMap { m =>
+      try {
+        val r = LocalBattery.run(m, panel)
+        val dof = n - r.betaR.length
+        val tCrit = new org.apache.commons.math3.distribution.TDistribution(dof.toDouble)
+          .inverseCumulativeProbability(0.975)
+        coefNames.indices.map { i =>
+          val covered = math.abs(r.betaR(i) - truth(i)) <= tCrit * r.seBetaR(i)
+          (ni, ne, rep, m, coefNames(i), r.betaR(i), r.seBetaR(i), covered, r.tiltWarning)
+        }
+      } catch {
+        // degenerate replication (singular fit): skip, like an errored
+        // R rep — but NEVER swallow fatal errors (OOM, interrupts)
+        case scala.util.control.NonFatal(_) => Seq.empty
+      }
+    }
   }
 
   /** Rows-parallel route for oversized cells: each replication's panel is

@@ -7,9 +7,10 @@ import breeze.numerics.{sqrt => bsqrt}
   * `Estimators`/`Battery`, but over in-memory arrays — no Spark jobs.
   * This is the scale path for the Monte-Carlo harness (SURVEY.md §3.3):
   * the reference's full grid is 52,000 fits over panels of ≤256k rows;
-  * running each fit INSIDE an executor via groupByKey(cell, rep).
-  * flatMapGroups makes replication the unit of parallelism instead of
-  * row-parallelism over tiny data. Semantics identical to the
+  * running each fit INSIDE an executor (the panel repartitioned by
+  * (cell, rep), one replication's rows at a time per task) makes
+  * replication the unit of parallelism instead of row-parallelism over
+  * tiny data. Semantics identical to the
   * distributed path; both validated against example_estimates.csv
   * (GoldenSpec / LocalGoldenSpec), transliterated from
   * tools/golden_oracle.py.

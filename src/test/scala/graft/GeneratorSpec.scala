@@ -57,6 +57,65 @@ class GeneratorSpec extends AnyFunSuite with SparkTestSession {
     assert(reps.select(cols: _*).exceptAll(perRep.select(cols: _*)).count() == 0)
   }
 
+  test("panelReps draws are pinned bit for bit") {
+    // xor of every row's xxhash64 over all columns: any change to any
+    // draw, column or row moves it
+    def fingerprint(c: PanelGenerator.Config): Long = {
+      val df = PanelGenerator.panelReps(spark, 2024L, c, 3)
+      df.select(bit_xor(xxhash64(df.columns.toSeq.map(col): _*))).head().getLong(0)
+    }
+    assert(fingerprint(PanelGenerator.Config(nInternal = 400, nExternal = 400)) ==
+      -6888489099390530848L)
+    assert(fingerprint(PanelGenerator.Config(nInternal = 7, nExternal = 5, tMax = 4)) ==
+      -2600213291005010351L)
+    assert(fingerprint(PanelGenerator.Config(nInternal = 30, nExternal = 20, tMax = 33,
+      arParam = 0.9)) == -8262639931681976028L)
+  }
+
+  test("perRepResults equals LocalBattery on each replication's collected panel") {
+    val cells = Seq(SimulationRunner.Cell(20, 15), SimulationRunner.Cell(12, 30))
+    val methods = graft.stats.LocalBattery.methodNames
+    val baseSeed = 77L
+    val got = SimulationRunner.perRepResults(spark, cells, nReps = 3, methods = methods,
+      baseSeed = baseSeed).collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getString(3), r.getString(4)) ->
+        (r.getDouble(5), r.getDouble(6), r.getBoolean(7), r.getBoolean(8))).toMap
+    val expected = for {
+      (cell, ci) <- cells.zipWithIndex
+      rep <- 1 to 3
+      panel = graft.stats.LocalBattery.fromDataFrame(PanelGenerator.panel(spark,
+        baseSeed + ci * 100000L + rep,
+        PanelGenerator.Config(nInternal = cell.nInternal, nExternal = cell.nExternal)),
+        "t", "user_id")
+      m <- methods
+      // a fit that throws is skipped by the harness, so it has no row
+      r <- scala.util.Try(graft.stats.LocalBattery.run(m, panel)).toOption.toSeq
+      (coef, i) <- SimulationRunner.coefNames.zipWithIndex
+    } yield (cell.nInternal, cell.nExternal, rep, m, coef) -> (r.betaR(i), r.seBetaR(i), r.tiltWarning)
+    assert(expected.nonEmpty && got.size == expected.size)
+    expected.foreach { case (key, (est, se, warn)) =>
+      val (gEst, gSe, _, gWarn) = got(key)
+      // bit for bit: compare the raw IEEE-754 bits, not within a tolerance
+      assert(java.lang.Double.doubleToRawLongBits(gEst) == java.lang.Double.doubleToRawLongBits(est), s"$key estimate")
+      assert(java.lang.Double.doubleToRawLongBits(gSe) == java.lang.Double.doubleToRawLongBits(se), s"$key se")
+      assert(gWarn == warn, s"$key tilt_warning")
+    }
+  }
+
+  test("a 2-replication cell's battery stage runs 2 tasks") {
+    // adaptive execution coalesces a small key-grouping shuffle into one
+    // task, which fits the replications one after another
+    val trace = graft.obs.QueryTrace.install(spark.sparkContext)
+    try {
+      val perRep = SimulationRunner.perRepResults(spark, Seq(SimulationRunner.Cell(25, 25)),
+        nReps = 2, methods = Seq("WCLS-Internal"))
+      val (rows, p) = trace.measure(perRep.collect())
+      assert(rows.length == 2 * 2)
+      // the battery is the last stage: it reads the replication-keyed exchange
+      assert(p.stages.maxBy(_.id).tasks == 2, p.report("battery").mkString("\n"))
+    } finally trace.remove()
+  }
+
   test("simulation harness smoke: metrics shape + calibration direction") {
     val perRep = SimulationRunner.perRepResults(
       spark, Seq(SimulationRunner.Cell(40, 40)), nReps = 4,

@@ -271,16 +271,18 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
     // the r14 v2 cliff: a generated method between HotSpot's 8000-byte
     // JIT limit and Spark's 65535 hugeMethodLimit runs in the bytecode
     // interpreter with NO plan/UI warning (measured 16 ms/row). Compile
-    // every WholeStageCodegen stage of each native-kernel query and
-    // assert its largest generated method would actually JIT.
+    // every WholeStageCodegen stage of each native-kernel query (and of
+    // the panel generator) and assert its largest generated method would
+    // actually JIT.
     val hotspotJitLimit = 8000
     // AQE defers codegen collapse to stage materialization; the
     // measurement needs the non-adaptive prepared plan (Bridge contract)
     withoutAqe {
-      for (q <- kernelQueries) {
-        val physical = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      for ((q, df) <- kernelPlans) {
+        val physical = df().queryExecution.executedPlan
         val sizes = org.apache.spark.sql.graft.Bridge.codegenStageSizes(physical)
         assert(sizes.nonEmpty, s"$q produced no WholeStageCodegen stage at all")
+        info(s"$q: ${sizes.size} codegen stage(s), largest method ${sizes.map(_._2).max} bytes")
         for ((stage, maxMethod) <- sizes)
           assert(maxMethod < hotspotJitLimit,
             s"$q codegen stage $stage has a $maxMethod-byte method — past the " +
@@ -291,8 +293,8 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
 
   test("kernel-bearing queries carry no CodegenFallback expression") {
     withoutAqe {
-      for (q <- kernelQueries) {
-        val physical = SparkEntry.queries(q)(spark, dir).queryExecution.executedPlan
+      for ((q, df) <- kernelPlans) {
+        val physical = df().queryExecution.executedPlan
         val fallbacks = org.apache.spark.sql.graft.Bridge.fallbackExpressions(physical)
         assert(fallbacks.isEmpty,
           s"$q evaluates interpreted expressions in-stage: ${fallbacks.distinct.mkString(", ")}")
@@ -303,6 +305,12 @@ class PlanAuditSpec extends AnyFunSuite with SparkTestSession {
   private val kernelQueries = Seq("v2_lsh_ann", "d2_minhash_lsh_pairs",
     "t19_bpe_tokens", "t22_bpe_merge_tokens", "d3_simhash_pairs", "v1_cosine_topk",
     "t23_gopher_gate", "t26_tokenizer_fertility", "t32_normalize_scrub")
+
+  // the kernel queries plus the simulation's panel generator
+  private def kernelPlans: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
+    kernelQueries.map(q => q -> (() => SparkEntry.queries(q)(spark, dir))) :+
+      ("panelReps" -> (() => graft.gen.PanelGenerator.panelReps(spark, 2024L,
+        graft.gen.PanelGenerator.Config(), 3)))
 
   test("d13/t32 are pure scan + one source-keyed aggregate (the t18 cheapest-map-pass shape)") {
     for (q <- Seq("d13_intradoc_line_dedup", "t32_normalize_scrub")) {
