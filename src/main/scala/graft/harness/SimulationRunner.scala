@@ -7,7 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.gen.PanelGenerator
-import graft.stats.LocalBattery
+import graft.stats.{Battery, EstimateResult, LocalBattery}
 
 /** Monte-Carlo simulation harness (reference: simulation.R:116-243,
   * SURVEY.md §2.11 H1-H5) — Spark-native replication parallelism:
@@ -16,10 +16,12 @@ import graft.stats.LocalBattery
   *     DataFrame from the counter-based generator (no driver loop over
   *     reps; generation is pure expressions),
   *  2. the estimator battery runs INSIDE executors per (cell, rep):
-  *     the panel is repartitioned by replication, sorted within each
-  *     partition, and each replication's rows are fitted by LocalBattery
-  *     in turn (52,000 small fits is replication-parallel work, not
-  *     row-parallel work — SURVEY §3.3),
+  *     the k-th (cell, rep) of a run goes to task k mod #tasks, sorted
+  *     within each partition, and each replication's rows are fitted in
+  *     turn on the estimators' array backend (LocalBattery) — 52,000
+  *     small fits is replication-parallel work, not row-parallel work
+  *     (SURVEY §3.3); cells too big for a task run on the DataFrame
+  *     backend instead,
   *  3. the A5 metric reduction (bias / empirical SE / relative
   *     efficiency / rMSE / coverage / warning counts) is a plain
   *     groupBy().agg() + a window for the vs-baseline ratio (A8).
@@ -36,16 +38,21 @@ object SimulationRunner {
   private type PanelRow =
     (Int, Int, Int, Double, Double, Double, Double, Double, Double, Double, Boolean, Long, Int)
 
+  /** One result row, with these columns. */
+  private type ResultRow = (Int, Int, Int, String, String, Double, Double, Boolean, Boolean)
+  private val resultColumns = Seq("n_internal", "n_external", "replication", "method", "coef",
+    "estimate", "se", "covered", "tilt_warning")
+
   /** Per-replication long-format results:
     * (n_internal, n_external, replication, method, coef, estimate, se,
     *  covered, tilt_warning).
     *
     * Scale guard: cells whose per-rep panel fits comfortably in one
-    * executor task (≤ maxLocalRows rows) run replication-parallel via
-    * LocalBattery; bigger cells would OOM a task
-    * materializing the panel, so they route rep-by-rep through the
-    * DISTRIBUTED Estimators battery (rows-parallel — the same math, the
-    * other execution path; ScaleRoutingSpec pins route equivalence).
+    * executor task (≤ maxLocalRows rows) run replication-parallel on the
+    * estimators' array backend (LocalBattery); bigger cells would OOM a
+    * task materializing the panel, so they route rep-by-rep through the
+    * DataFrame backend (Battery — the same estimator code, rows-parallel;
+    * ScaleRoutingSpec pins route agreement for every method).
     */
   def perRepResults(spark: SparkSession, cells: Seq[Cell], nReps: Int,
                     methods: Seq[String], cfg0: PanelGenerator.Config = PanelGenerator.Config(),
@@ -67,20 +74,22 @@ object SimulationRunner {
   }
 
   /** Replication-parallel route: every (cell, rep) battery inside one
-    * executor task via LocalBattery. */
+    * executor task on the array backend. */
   private def localRoute(spark: SparkSession, cells: Seq[(Cell, Int)], nReps: Int,
                          methods: Seq[String], cfg0: PanelGenerator.Config,
-                         baseSeed: Long, truthVals: Array[Double] = betaRTrue): DataFrame = {
+                         baseSeed: Long, truth: Array[Double]): DataFrame = {
     import spark.implicits._
     // ONE generator tree per cell (not per rep): panelReps folds the rep
     // dimension into the range with seed = base + replication, giving
     // draws bit-identical to the per-rep union but a plan that stays a
     // few hundred KB at any nReps.
-    val panels = cells.map { case (cell, ci) =>
+    // `unit` numbers the run's (cell, replication) pairs 0, 1, 2, ...
+    val panels = cells.zipWithIndex.map { case ((cell, ci), pos) =>
       val cfg = cfg0.copy(nInternal = cell.nInternal, nExternal = cell.nExternal)
       PanelGenerator.panelReps(spark, baseSeed + ci.toLong * 100000L, cfg, nReps)
         .withColumn("n_internal", lit(cell.nInternal))
         .withColumn("n_external", lit(cell.nExternal))
+        .withColumn("unit", lit(pos * nReps - 1) + col("replication"))
     }.reduce(_ unionByName _)
 
     // Generation is its own job: the panel is materialized once
@@ -88,24 +97,25 @@ object SimulationRunner {
     // battery task does not regenerate it, and perfbench's `gen` layer
     // finds the generation time by this job's call site.
     val slim = panels.select(
-      $"n_internal", $"n_external", $"replication",
+      $"unit", $"n_internal", $"n_external", $"replication",
       $"y", $"a", $"x1", $"x2", $"x3", $"p_h", $"p_h_a", $"is_internal",
       $"user_id", $"t")
       .localCheckpoint()
 
-    val methodsB = spark.sparkContext.broadcast(methods)
-    val truth = truthVals
-    // A partition count set here is one adaptive execution keeps: left to
-    // a key-grouping shuffle, AQE coalesced every cell's few-MB battery
-    // input into ONE task and fitted its replications one after another.
+    // The k-th unit goes to task k mod nTasks, so the units spread evenly
+    // over the tasks; a hash of the keys can put two units in one task
+    // and leave another idle. A partition count set here is one adaptive
+    // execution keeps: left to a key-grouping shuffle, AQE coalesces a
+    // cell's few-MB battery input into ONE task.
     val keys = Seq($"n_internal", $"n_external", $"replication")
     val nTasks = math.min(cells.size * nReps, spark.sparkContext.defaultParallelism)
 
     slim
-      .repartition(nTasks, keys: _*)
+      .repartitionById(nTasks, $"unit" % nTasks)
       // R layout order within a replication: user-fastest within each t
       // (generate_data.R:77-93)
       .sortWithinPartitions(keys :+ $"t" :+ $"user_id": _*)
+      .drop("unit")
       .as[PanelRow]
       .mapPartitions { it =>
         // one replication's rows at a time: a task holds one panel
@@ -115,27 +125,25 @@ object SimulationRunner {
           val rows = mutable.ArrayBuilder.make[PanelRow]
           while (in.hasNext && in.head._1 == ni && in.head._2 == ne && in.head._3 == rep)
             rows += in.next()
-          battery(ni, ne, rep, rows.result(), methodsB.value, truth)
+          val rs = rows.result()
+          val panel = LocalBattery.Panel(rs.map(_._4), rs.map(_._5), rs.map(_._6), rs.map(_._7),
+            rs.map(_._8), rs.map(_._9), rs.map(_._10), rs.map(_._11), rs.map(_._12))
+          resultRows(ni, ne, rep, rs.length.toLong, methods, truth)(LocalBattery.run(_, panel))
         }
       }
-      .toDF("n_internal", "n_external", "replication", "method", "coef",
-        "estimate", "se", "covered", "tilt_warning")
+      .toDF(resultColumns: _*)
   }
 
-  /** Every method on one replication's rows (in R layout order), as
-    * result rows; a degenerate fit leaves no rows. */
-  private def battery(ni: Int, ne: Int, rep: Int,
-                      rows: Array[PanelRow],
-                      methods: Seq[String], truth: Array[Double])
-      : Iterator[(Int, Int, Int, String, String, Double, Double, Boolean, Boolean)] = {
-    val panel = LocalBattery.Panel(
-      rows.map(_._4), rows.map(_._5), rows.map(_._6), rows.map(_._7), rows.map(_._8),
-      rows.map(_._9), rows.map(_._10), rows.map(_._11), rows.map(_._12))
-    val n = rows.length
-    methods.iterator.flatMap { m =>
+  /** Each method's fit as result rows: per coefficient the estimate, the
+    * SE and whether the t-interval (dof = panel rows − coefficients)
+    * covers the truth. A degenerate fit (singular, say) leaves no rows,
+    * like an errored R replication. */
+  private def resultRows(ni: Int, ne: Int, rep: Int, nRows: Long, methods: Seq[String],
+                         truth: Array[Double])(fit: String => EstimateResult): Seq[ResultRow] =
+    methods.flatMap { m =>
       try {
-        val r = LocalBattery.run(m, panel)
-        val dof = n - r.betaR.length
+        val r = fit(m)
+        val dof = nRows - r.betaR.length
         val tCrit = new org.apache.commons.math3.distribution.TDistribution(dof.toDouble)
           .inverseCumulativeProbability(0.975)
         coefNames.indices.map { i =>
@@ -143,25 +151,22 @@ object SimulationRunner {
           (ni, ne, rep, m, coefNames(i), r.betaR(i), r.seBetaR(i), covered, r.tiltWarning)
         }
       } catch {
-        // degenerate replication (singular fit): skip, like an errored
-        // R rep — but NEVER swallow fatal errors (OOM, interrupts)
+        // never swallow fatal errors (OOM, interrupts)
         case scala.util.control.NonFatal(_) => Seq.empty
       }
     }
-  }
 
   /** Rows-parallel route for oversized cells: each replication's panel is
-    * generated and cached once, then every method's fused-MomentPass
-    * distributed battery (stats.Estimators) runs over it — the panel is
-    * never materialized on a single task, so per-rep size is bounded by
-    * cluster memory, not task memory. Same dof/coverage conventions as
-    * the local route.
+    * generated and cached once, then every method runs over it on the
+    * estimators' DataFrame backend (one Spark job per batch of moments) —
+    * the panel is never materialized on a single task, so per-rep size is
+    * bounded by cluster memory, not task memory. Result rows as the local
+    * route's (resultRows).
     */
   private def distributedRoute(spark: SparkSession, cells: Seq[(Cell, Int)], nReps: Int,
                                methods: Seq[String], cfg0: PanelGenerator.Config,
-                               baseSeed: Long, truthVals: Array[Double] = betaRTrue): DataFrame = {
+                               baseSeed: Long, truth: Array[Double]): DataFrame = {
     import spark.implicits._
-    val truth = truthVals
     // a strictly sequential driver loop would leave executors idle between
     // the small jobs of each fit — run a bounded number of replications
     // concurrently (Spark's scheduler interleaves their jobs); results are
@@ -177,24 +182,9 @@ object SimulationRunner {
           scala.concurrent.Future {
             val panel = PanelGenerator
               .panel(spark, baseSeed + ci.toLong * 100000L + rep, cfg).cache()
-            try {
-              methods.flatMap { m =>
-                try {
-                  val r = graft.stats.Battery.run(m, panel)
-                  // dof convention matches the local route: full panel rows
-                  val dof = nRows - r.betaR.length
-                  val tCrit = new org.apache.commons.math3.distribution.TDistribution(dof.toDouble)
-                    .inverseCumulativeProbability(0.975)
-                  coefNames.indices.map { i =>
-                    val covered = math.abs(r.betaR(i) - truth(i)) <= tCrit * r.seBetaR(i)
-                    (cell.nInternal, cell.nExternal, rep, m, coefNames(i),
-                      r.betaR(i), r.seBetaR(i), covered, r.tiltWarning)
-                  }
-                } catch {
-                  case scala.util.control.NonFatal(_) => Seq.empty // degenerate rep, as local route
-                }
-              }
-            } finally panel.unpersist()
+            try resultRows(cell.nInternal, cell.nExternal, rep, nRows, methods, truth)(
+              Battery.run(_, panel))
+            finally panel.unpersist()
           }
         }
         scala.concurrent.Await.result(
@@ -202,8 +192,7 @@ object SimulationRunner {
           scala.concurrent.duration.Duration.Inf).flatten
       }
     } finally pool.shutdown()
-    rows.toDF("n_internal", "n_external", "replication", "method", "coef",
-      "estimate", "se", "covered", "tilt_warning")
+    rows.toDF(resultColumns: _*)
   }
 
   /** β_true as a Column keyed by the `coef` name column — the ONE

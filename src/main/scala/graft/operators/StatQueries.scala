@@ -29,7 +29,7 @@ object StatQueries {
       val pass = new MomentPass(li)
       val g = pass.gram(x, lit(1.0))
       pass.run()
-      val m = pass.matrix(g)
+      val m = g()
       val rows = for { i <- 0 until 3; j <- 0 until 3 }
         yield Row(i.toLong, j.toLong, BigDecimal(m(i, j)).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble)
       s.createDataFrame(
@@ -163,7 +163,7 @@ object StatQueries {
   val qAwcls = QueryDef(
     "s5_awcls",
     (s, _) => {
-      val r = Estimators.awcls(Battery.examplePanel(s))
+      val r = Battery.run("A-WCLS", Battery.examplePanel(s))
       val names = Seq("a_centered", "a_centered:x1", "x2_proj:1", "x2_proj:x1")
       val rows = names.indices.map { i =>
         Row(names(i),

@@ -23,9 +23,23 @@ object Aggregates {
   private def grow(buf: Array[Double], n: Int): Array[Double] =
     if (buf.length >= n) buf else new Array[Double](n)
 
-  /** Σ_rows w · v vᵀ (flattened p·p, row-major). */
-  class GramAgg extends Aggregator[VW, Array[Double], Seq[Double]] {
+  /** A fixed-length sum over rows; `reduce` adds one row's terms. */
+  abstract class SumAgg[I] extends Aggregator[I, Array[Double], Seq[Double]] {
     def zero: Array[Double] = Array.emptyDoubleArray
+    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
+      if (a.length == 0) return b
+      if (b.length == 0) return a
+      var i = 0
+      while (i < a.length) { a(i) += b(i); i += 1 }
+      a
+    }
+    def finish(b: Array[Double]): Seq[Double] = b.toSeq
+    def bufferEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
+    def outputEncoder: Encoder[Seq[Double]] = ExprEnc.doubleSeq
+  }
+
+  /** Σ_rows w · v vᵀ (flattened p·p, row-major). */
+  class GramAgg extends SumAgg[VW] {
     def reduce(b0: Array[Double], in: VW): Array[Double] = {
       if (in.v == null) return b0
       val p = in.v.size
@@ -42,21 +56,10 @@ object Aggregates {
       }
       b
     }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      if (a.length == 0) return b
-      if (b.length == 0) return a
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(b: Array[Double]): Seq[Double] = b.toSeq
-    def bufferEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
-    def outputEncoder: Encoder[Seq[Double]] = ExprEnc.doubleSeq
   }
 
   /** Σ_rows w · u vᵀ (flattened p·q, row-major). */
-  class CrossAgg extends Aggregator[UVW, Array[Double], Seq[Double]] {
-    def zero: Array[Double] = Array.emptyDoubleArray
+  class CrossAgg extends SumAgg[UVW] {
     def reduce(b0: Array[Double], in: UVW): Array[Double] = {
       if (in.u == null || in.v == null) return b0
       val p = in.u.size; val q = in.v.size
@@ -70,21 +73,10 @@ object Aggregates {
       }
       b
     }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      if (a.length == 0) return b
-      if (b.length == 0) return a
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(b: Array[Double]): Seq[Double] = b.toSeq
-    def bufferEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
-    def outputEncoder: Encoder[Seq[Double]] = ExprEnc.doubleSeq
   }
 
   /** Σ_rows w · v (length p). The A1 per-user score-sum aggregate. */
-  class VecSumAgg extends Aggregator[VW, Array[Double], Seq[Double]] {
-    def zero: Array[Double] = Array.emptyDoubleArray
+  class VecSumAgg extends SumAgg[VW] {
     def reduce(b0: Array[Double], in: VW): Array[Double] = {
       if (in.v == null) return b0
       val p = in.v.size
@@ -93,16 +85,6 @@ object Aggregates {
       while (i < p) { b(i) += in.w * in.v(i); i += 1 }
       b
     }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] = {
-      if (a.length == 0) return b
-      if (b.length == 0) return a
-      var i = 0
-      while (i < a.length) { a(i) += b(i); i += 1 }
-      a
-    }
-    def finish(b: Array[Double]): Seq[Double] = b.toSeq
-    def bufferEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
-    def outputEncoder: Encoder[Seq[Double]] = ExprEnc.doubleSeq
   }
 
   case class ScoredId(sim: Double, id: Long)

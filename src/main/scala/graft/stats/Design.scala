@@ -35,7 +35,4 @@ object Design {
     Design(first +: rest)
 
   val intercept: (String, Column) = ("(Intercept)", lit(1.0))
-
-  /** Zero-padded block concat for stacked score vectors. */
-  def zeros(n: Int): Seq[Column] = Seq.fill(n)(lit(0.0))
 }

@@ -1,134 +1,102 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector}
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import breeze.linalg.{DenseMatrix, DenseVector, diag, kron}
 
-/** The WCLS estimator family (SURVEY.md §2.8-§2.10), re-expressed
-  * Spark-first: derived columns are Catalyst expressions, every moment
-  * reduction is a fused distributed pass (MomentPass), d×d algebra is
-  * driver-side Breeze. Semantics pinned against the reference goldens by
-  * tools/golden_oracle.py (all 10 methods reproduce example_estimates.csv).
-  *
-  * Reference: methods/{wcls,pwcls,etwcls,drwcls,petwcls}.R.
-  */
+/** A fitted estimator: the moderator coefficients β_r, their standard
+  * errors and covariance, and whether the tilt model fell back to a
+  * design of at most 10 columns. */
 final case class EstimateResult(
     betaR: DenseVector[Double],
     seBetaR: DenseVector[Double],
     varBetaR: DenseMatrix[Double],
-    chi2: Double,
-    zScores: DenseVector[Double],
-    n: Long,
-    p: Int,
     tiltWarning: Boolean)
 
+/** The WCLS estimator family (SURVEY.md §2.8-§2.10; reference
+  * methods/{wcls,pwcls,etwcls,drwcls,petwcls,awcls}.R), each method
+  * written once against [[Moments]]: the logistic fits, the weights,
+  * the WLS fits, the per-user score sums and the sandwich, then the
+  * inverse-variance pooling. The backend decides where the rows live:
+  * [[FrameMoments]] runs every batch of reductions as one Spark job over
+  * a DataFrame, [[LocalBattery.ArrayMoments]] computes them on arrays in
+  * the calling task. The d×d algebra (Hessian blocks, sandwich step,
+  * pooling) is driver-side Breeze, shared.
+  *
+  * Operation order follows the array backend's kernels: the committed
+  * acceptance and sensitivity checkpoints were produced by them and are
+  * compared bit for bit, so the formulas below keep each product and
+  * reduction in the order those checkpoints need.
+  */
 object Estimators {
 
-  /** Panel facts computed in one pass; cluster column per the reference's
-    * balanced-sandwich block semantics (Sandwich.blockClusterCol).
-    */
-  final case class PanelInfo(n: Long, nUsers: Int, tMax: Int, piInternal: Double,
-      denseUserIds: Boolean = false)
+  /** A per-row design of the centered treatment. */
+  trait Formula { def apply(r: Rows)(aC: r.V): r.X }
 
-  def panelInfo(df: DataFrame): PanelInfo = {
-    // the density probe rides the same single pass: INTEGRAL ids
-    // covering exactly 1..nUsers (min 1, max nUsers, all distinct)
-    // make rank(user_id) == user_id, so withBlockCluster can skip the
-    // rank table entirely. Integral only: fractional ids {1.0, 1.5,
-    // 3.0} would pass a cast-to-long min/max probe yet collide under
-    // rank = cast(id) — the fast path must be impossible there.
-    val numericIds = {
-      import org.apache.spark.sql.types._
-      df.schema("user_id").dataType match {
-        case ByteType | ShortType | IntegerType | LongType => true
-        case _ => false
-      }
-    }
-    val idMin = if (numericIds) min(col("user_id")).cast("long") else lit(null).cast("long")
-    val idMax = if (numericIds) max(col("user_id")).cast("long") else lit(null).cast("long")
-    val r = df.agg(
-      count(lit(1)),
-      countDistinct(col("user_id")),
-      avg(col("is_internal").cast("double")),
-      idMin, idMax,
-      count(col("user_id"))).head()
-    val n = r.getLong(0)
-    require(n > 0, "empty panel: no rows to fit an estimator on")
-    val nU = r.getLong(1).toInt
-    // NULL user_id rows are invisible to min/max/countDistinct, so
-    // they could fake density; the dense path would emit them with a
-    // null __cluster while the fallback's inner join drops them —
-    // same input, different row counts. A null id disables the fast
-    // path (count(user_id) counts only non-null rows).
-    val dense = numericIds && !r.isNullAt(3) &&
-      r.getLong(3) == 1L && r.getLong(4) == nU.toLong && r.getLong(5) == n
-    PanelInfo(n, nU, math.round(n.toDouble / nU).toInt, r.getDouble(2), dense)
+  // beta_h_formula <- y ~ x1 + x2 + x3
+  def betaH(r: Rows): r.X = { import r._; cbind(one, x1, x2, x3) }
+  // beta_r_formula <- y ~ 0 + I(a_centered) + I(a_centered * x1)
+  def betaR(r: Rows)(aC: r.V): r.X = { import r._; cbind(aC, aC * x1) }
+  // beta_s_formula <- y ~ 0 + I(a_centered) + I(a_centered*x1) + I(a_centered*x2)
+  val betaS: Formula = new Formula {
+    def apply(r: Rows)(aC: r.V): r.X = { import r._; cbind(aC, aC * x1, aC * x2) }
+  }
+  // et_beta_h_formula: per-study baselines, no global intercept
+  def etBetaH(r: Rows): r.X = {
+    import r._
+    cbind(isI, isI * x1, isI * x2, isI * x3, isE, isE * x1, isE * x2, isE * x3)
+  }
+  // et_beta_r_formula: per-study centered-treatment blocks
+  def etBetaR(r: Rows)(aC: r.V): r.X = {
+    import r._
+    cbind(isI * aC, isI * aC * x1, isE * aC, isE * aC * x1)
+  }
+  // pwcls_r_formula <- wcls_s_causal_effects ~ x1
+  def pwclsR(r: Rows): r.X = { import r._; cbind(one, x1) }
+  // p_h_formula <- a ~ 1 + as.numeric(is_internal) + x1 + x2 + x3
+  def pHModel(r: Rows): r.X = { import r._; cbind(one, isI, x1, x2, x3) }
+
+  /** The tilt model's design (etwcls.R:115-123): intercept, two B-spline
+    * bases of x1 and x2 and, with `interact`, their pairwise products. */
+  def splineDesign(b: Moments)(dfP: Int, degree: Int, interact: Boolean): b.X = {
+    import b._
+    val b1 = bspline(x1, dfP, degree)
+    val b2 = bspline(x2, dfP, degree)
+    val main = Seq(cbind(one), b1, b2)
+    if (!interact) hcat(main: _*)
+    else hcat(main :+ cbind((for (k <- 0 until width(b2); j <- 0 until width(b1))
+      yield column(b1, j) * column(b2, k)): _*): _*)
   }
 
-  /** Adds `__cluster`: R-order row position ((t-1)·nUsers + userRank)
-    * divided into blocks of tMax.
-    *
-    * Dense ids (the generator's guarantee, PanelGenerator.scala: user_id
-    * = 1..n): rank(user_id) == user_id, so the cluster is pure map-side
-    * arithmetic — no rank table, no join, no window, scale-free.
-    *
-    * Sparse-id fallback: userRank via a broadcast-joined tiny rank
-    * table — no global shuffle of the PANEL itself, and the rank table
-    * is a parallel range-partitioned sort of the distinct ids with
-    * zipWithIndex attaching the 1-based position (rank by sorted order
-    * ≡ row_number over distinct keys; ids are distinct so there are no
-    * ties to break). No single task ever sorts the whole id set — the
-    * old unpartitioned row_number window did, which both serialized the
-    * build and warned on every run (VERDICT r21 #7). Bound: the
-    * broadcast of the rank table, fine to ~10M distinct ids (the
-    * reference workload tops out at 12,800 users/cell); past that, feed
-    * panels with dense ids or pre-rank upstream.
-    */
-  def withBlockCluster(df: DataFrame, info: PanelInfo): DataFrame = {
-    // __urank is a reserved helper name: the fallback path joins on it
-    // and BOTH paths drop it at the end, so a caller column of that
-    // name would be silently removed (or make the join ambiguous)
-    require(!df.columns.contains("__urank"),
-      "withBlockCluster reserves the column name __urank")
-    val urank =
-      if (info.denseUserIds) col("user_id").cast("long")
-      else col("__urank")
-    val pos = (col("t") - 1) * lit(info.nUsers.toLong) + urank
-    val base =
-      if (info.denseUserIds) df
-      else {
-        val sortedIds = df.select("user_id").distinct().sort("user_id")
-        // zipWithIndex: partition-local positions offset by the range
-        // partitioner's cumulative counts — one extra count job, no
-        // global single-task sort; order within and across partitions
-        // is exactly the sort's, so index+1 ≡ row_number(orderBy id)
-        val ranked = sortedIds.rdd.zipWithIndex().map { case (r, i) =>
-          org.apache.spark.sql.Row(r.get(0), i + 1L)
-        }
-        val ranks = df.sparkSession.createDataFrame(ranked,
-          org.apache.spark.sql.types.StructType(sortedIds.schema.fields :+
-            org.apache.spark.sql.types.StructField("__urank",
-              org.apache.spark.sql.types.LongType, nullable = false)))
-        df.join(broadcast(ranks), "user_id")
-      }
-    // both paths emit the same schema: __cluster appended, no helper cols
-    base.withColumn("__cluster", floor((pos - 1) / lit(info.tMax)))
-      .drop("__urank")
+  /** `method` (one of Battery.methodNames or "A-WCLS") on `b`. */
+  def fit(method: String, b: Moments): EstimateResult = method match {
+    case "WCLS-Internal"     => on(b.internalOnly)(_.wcls())
+    case "WCLS-Pooled"       => on(b)(_.wcls())
+    case "P-WCLS-Internal"   => on(b.internalOnly)(_.pwcls(observational = false, betaS, Nil))
+    case "P-WCLS-Pooled"     => on(b)(_.pwcls(observational = false, betaS, Nil))
+    case "P-WCLS-Pooled-Obs" => on(b)(_.pwcls(observational = true, betaS, Nil))
+    case "ET-WCLS-Equal"     => on(b)(_.etwcls("equal"))
+    case "ET-WCLS-Kron"      => on(b)(_.etwcls("kronecker"))
+    case "ET-WCLS"           => on(b)(_.etwcls("full"))
+    case "DR-WCLS"           => on(b)(_.drwcls())
+    case "PET-WCLS"          => on(b)(_.petwcls())
+    case "A-WCLS"            => on(b)(_.awcls())
+    case other => throw new IllegalArgumentException(s"unknown estimator '$other'")
   }
 
-  private def sigmoid(z: Column): Column = lit(1.0) / (lit(1.0) + exp(-z))
+  /** P-WCLS with a caller's beta_s formula. `dividerIdx`
+    * (pwcls.R beta_s_formula_divider_idx): 1-based start indices of the
+    * 2nd..kth treatment-level blocks inside beta_s. Each block is
+    * de-centered by ITS OWN first column (pwcls.R:200 "Assume first
+    * column is intercept") and gets its own second-stage regression —
+    * multi-response OLS via ONE shared Gramian (M4). */
+  def pwcls(b: Moments, betaS: Formula, dividerIdx: Seq[Int]): EstimateResult =
+    on(b)(_.pwcls(observational = false, betaS, dividerIdx))
 
-  private def inference(sand: DenseMatrix[Double], posR: Seq[Int],
-                        betaR: DenseVector[Double], betaRTrue: DenseVector[Double],
-                        n: Long, tiltWarning: Boolean): EstimateResult = {
-    val dR = posR.size
-    val v = DenseMatrix.tabulate(dR, dR)((i, j) => sand(posR(i), posR(j)))
-    val se = LinAlg.diagSqrt(v)
-    val err = betaR - betaRTrue
-    val z = err /:/ se
-    val chi2 = err.t * LinAlg.solveVec(v, err)
-    EstimateResult(betaR, se, v, chi2, z, n, sand.rows, tiltWarning)
-  }
+  private def on(b: Moments)(f: Fit => EstimateResult): EstimateResult =
+    try f(new Fit(b)) finally b.close()
+
+  private def estimate(betaR: DenseVector[Double], v: DenseMatrix[Double],
+                       tiltWarning: Boolean): EstimateResult =
+    EstimateResult(betaR.copy, breeze.numerics.sqrt(diag(v)), v.copy, tiltWarning)
 
   /** Inverse-variance pooling blocks (etwcls.R:171-206, C1-C4). */
   object Pooling {
@@ -159,708 +127,369 @@ object Estimators {
       val wSum = w1 + w2
       val pooled = (betaR(0 until 2) * w1 + betaR(2 until 4) * w2) / wSum
       val eye = DenseMatrix.eye[Double](2)
-      val kronMat = LinAlg.kronecker(lambdaTilde(0, ::).t.toDenseMatrix, eye) +
-        LinAlg.kronecker(lambdaTilde(1, ::).t.toDenseMatrix, eye)
+      val kronMat = kron(lambdaTilde(0, ::).t.toDenseMatrix, eye) +
+        kron(lambdaTilde(1, ::).t.toDenseMatrix, eye)
       val vp = (kronMat * v * kronMat.t) / (wSum * wSum)
       (pooled, vp)
     }
   }
 
-  // ---------------------------------------------------------------------
-  // Shared stage: intercept-only-or-general propensity + derived columns
-  // (wcls.R:122-135, P1-P3).
-  // ---------------------------------------------------------------------
-  private final case class Propensity(
-      dfEnriched: DataFrame, fit: Glm.LogisticFit, design: Design)
+  /** The methods over one panel. */
+  private final class Fit(val b: Moments) {
+    import b._
 
-  private def fitPropensity(df: DataFrame, design: Design, pHat: String,
-                            aCentered: String, pHatA: String, wName: String): Propensity = {
-    val f = Glm.logistic(df, design, col("a"))
-    val p = f.predict(design)
-    val enriched = df
-      .withColumn(pHat, p)
-      .withColumn(aCentered, col("a") - col(pHat))
-      .withColumn(pHatA, col("a") * col(pHat) + (lit(1.0) - col("a")) * (lit(1.0) - col(pHat)))
-      .withColumn(wName, col(pHatA) / col("p_h_a"))
-    Propensity(enriched, f, design)
-  }
-
-  // ---------------------------------------------------------------------
-  // Shared stage: exponential-tilt model with the spline-df fallback
-  // ladder (etwcls.R:112-130, M8 + P7). Returns the enriched frame with
-  // raw_tilt_ratios/tilt_ratios plus the omega design & coefficients.
-  // ---------------------------------------------------------------------
-  final case class Tilt(df: DataFrame, design: Design, omega: DenseVector[Double],
-                        warning: Boolean)
-
-  def fitTilt(df: DataFrame, piInternal: Double): Tilt = {
-    val ladder = Seq((3, 2), (2, 2), (1, 1))
-    var chosen: Option[(Design, Glm.LogisticFit)] = None
-    var last: (Design, Glm.LogisticFit) = null
-    for ((dfP, deg) <- ladder if chosen.isEmpty) {
-      val b1 = BSpline.fit(df, col("x1"), dfP, deg).designOf("bs_x1_", col("x1"))
-      val b2 = BSpline.fit(df, col("x2"), dfP, deg).designOf("bs_x2_", col("x2"))
-      val inter = Design(for {
-        (n2, c2) <- b2.terms
-        (n1, c1) <- b1.terms
-      } yield (s"$n1:$n2", c1 * c2))
-      val design = Design(Seq(Design.intercept)) ++ b1 ++ b2 ++ inter
-      val fit = Glm.logistic(df, design, col("is_internal").cast("double"))
-      last = (design, fit)
-      if (!fit.warning) chosen = Some(last)
+    /** One block of the stacked estimating equations: its per-row score
+      * columns and its diagonal Hessian block. */
+    private final class Eq(val score: X, val hess: () => DenseMatrix[Double]) {
+      val d: Int = width(score)
     }
-    val (design, fit) = chosen.getOrElse(last)
-    val warning = design.width <= 10
-    val omega = fit.coef.copy
-    omega(0) -= math.log(piInternal / (1.0 - piInternal))
-    val raw = exp(design.dot(omega.toArray.toSeq))
-    val out = df
-      .withColumn("raw_tilt_ratios", raw)
-      .withColumn("tilt_ratios",
-        col("is_internal").cast("double") + col("is_external").cast("double") * col("raw_tilt_ratios"))
-    Tilt(out, design, omega, warning)
-  }
+    /** A Hessian block off the diagonal: rows of `row`, columns of `col`
+      * from its `at`-th on. */
+    private final class Cross(val row: Eq, val col: Eq, val m: () => DenseMatrix[Double],
+                              val at: Int = 0)
 
-  /** Tilt score/hessian block contributions (shared by et/dr/pet). */
-  private def tiltScoreCols(design: Design, piInternal: Double): (Design, Column) = {
-    val rho = piInternal / (1.0 - piInternal)
-    val pOmegaNum = lit(rho) * col("raw_tilt_ratios")
-    val pOmega = pOmegaNum / (lit(1.0) + pOmegaNum)
-    val scores = design.scale(col("is_internal").cast("double") - pOmega)
-    (scores, pOmega * (lit(1.0) - pOmega))
-  }
-
-  // =====================================================================
-  // WCLS (wcls.R:116-194). Battery uses estimate_p_r=TRUE, no tilt.
-  // =====================================================================
-  def wcls(df0: DataFrame, betaRTrue: DenseVector[Double],
-           betaH: Design, betaROf: Column => Design, pRDesign: Design): EstimateResult = {
-    val info = panelInfo(df0)
-    val prop = fitPropensity(df0, pRDesign, "p_r_hat", "a_centered", "p_r_hat_a", "w")
-    val df = withBlockCluster(prop.dfEnriched, info).cache()
-    try {
-      val xR = betaROf(col("a_centered"))
-      val xHr = betaH ++ xR
-      val beta = Glm.wls(df, xHr, col("y"), col("w"))
-      val dH = betaH.width; val dR = xR.width; val dA = pRDesign.width
-      val d = dA + dH + dR
-      val betaHv = beta(0 until dH); val betaRv = beta(dH until dH + dR)
-
-      val resid = col("y") - xHr.dot(beta.toArray.toSeq)
-      val wres = col("w") * resid // tilt_ratios == 1
-      val fitR = xR.dot(betaRv.toArray.toSeq)
-
-      // scores: [(a - p̂)·Xα | wres·Xh | wres·Xr]
-      val scores = pRDesign.scale(col("a") - col("p_r_hat")) ++
-        xHr.scale(wres)
-
-      // Hessian blocks — ONE pass
-      val pHat = col("p_r_hat"); val pHatA = col("p_r_hat_a")
-      val logd = (-(lit(2.0) * col("a") - 1.0) * pHat * (lit(1.0) - pHat)) / pHatA
-      val prd = -(lit(1.0) - pHat)
-      val xRraw = xR.scale(lit(1.0) / col("a_centered"))
-      val blkNeg = Design(Design.zeros(dH).map(("z", _))) ++ xRraw.scale(-pHat)
-
-      val pass = new MomentPass(df)
-      val gA = pass.gram(pRDesign, pHat * (lit(1.0) - pHat))
-      val gHr = pass.gram(xHr, col("w"))
-      val c1 = pass.cross(xHr, pRDesign, wres * logd)
-      val c2 = pass.cross(blkNeg, pRDesign, wres * prd)
-      val c3 = pass.cross(xHr, pRDesign, pHat * fitR / col("a_centered") * col("w") * prd)
-      pass.run()
-
+    /** The Hessian of the equations stacked in order, their scores side
+      * by side, and each equation's rows. */
+    private def stack(eqs: Seq[Eq], cross: Seq[Cross])
+        : (DenseMatrix[Double], X, Map[Eq, Range]) = {
+      val at = eqs.zip(eqs.scanLeft(0)(_ + _.d)).map { case (e, o) => e -> (o until o + e.d) }.toMap
+      val d = eqs.map(_.d).sum
       val h = DenseMatrix.zeros[Double](d, d)
-      h(0 until dA, 0 until dA) := pass.matrix(gA)
-      h(dA until d, dA until d) := pass.matrix(gHr)
-      h(dA until d, 0 until dA) := pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-
-      val meat = Sandwich.meat(df, scores, col("__cluster"))
-      val sand = LinAlg.sandwichStep(h, meat, info.nUsers, d)
-      inference(sand, (dA + dH) until d, betaRv, betaRTrue, info.n, tiltWarning = false)
-    } finally df.unpersist()
-  }
-
-  // =====================================================================
-  // P-WCLS (pwcls.R). Battery variants: internal_only / pooled / pooled-obs.
-  // =====================================================================
-  /** `dividerIdx` (pwcls.R beta_s_formula_divider_idx): 1-based start
-    * indices of the 2nd..kth treatment-level blocks inside beta_s. Each
-    * block is de-centered by ITS OWN first column (pwcls.R:200 "Assume
-    * first column is intercept") and gets its own second-stage
-    * regression — multi-response OLS via ONE shared Gramian with
-    * multiple right-hand sides (M4). Default: single block (the
-    * reference battery's configuration, golden-tested).
-    */
-  def pwcls(dfAll: DataFrame, betaRTrue: DenseVector[Double],
-            betaH: Design, betaSOf: Column => Design, betaROf: DataFrame => Design,
-            pSDesign: Design, internalOnly: Boolean = false,
-            pHDesign: Option[Design] = None,
-            dividerIdx: Seq[Int] = Nil): EstimateResult = {
-    val df1 = if (internalOnly) dfAll.filter(col("is_internal")) else dfAll
-    val info = panelInfo(df1)
-
-    // optional estimated p_h (observational mode, pwcls.R:149-156)
-    val (dfPh, alphaHFit) = pHDesign match {
-      case Some(dsg) =>
-        val f = Glm.logistic(df1, dsg, col("a"))
-        val pH = f.predict(dsg)
-        (df1.withColumn("p_h_hat", pH)
-           .withColumn("p_h_a_use", col("a") * pH + (lit(1.0) - col("a")) * (lit(1.0) - pH)),
-         Some(f))
-      case None =>
-        (df1.withColumn("p_h_a_use", col("p_h_a")), None)
+      eqs.foreach(e => h(at(e), at(e)) := e.hess())
+      cross.foreach { c =>
+        val m = c.m()
+        val from = at(c.col).start + c.at
+        h(at(c.row), from until from + m.cols) := m
+      }
+      (h, hcat(eqs.map(_.score): _*), at)
     }
 
-    val fS = Glm.logistic(dfPh, pSDesign, col("a"))
-    val pS = fS.predict(pSDesign)
-    val dfE0 = dfPh
-      .withColumn("p_s_hat", pS)
-      .withColumn("a_centered", col("a") - col("p_s_hat"))
-      .withColumn("p_s_hat_a", col("a") * col("p_s_hat") + (lit(1.0) - col("a")) * (lit(1.0) - col("p_s_hat")))
-      .withColumn("w", col("p_s_hat_a") / col("p_h_a_use"))
-    val df = withBlockCluster(dfE0, info).cache()
-    try {
-      val xS = betaSOf(col("a_centered"))
-      val xHs = betaH ++ xS
-      val beta = Glm.wls(df, xHs, col("y"), col("w"))
-      val dH = betaH.width; val dS = xS.width
-      val betaHv = beta(0 until dH); val betaSv = beta(dH until dH + dS)
+    /** The cluster-robust sandwich of the stacked equations (helpers.R:1-22). */
+    private def sandwich(eqs: Seq[Eq], cross: Cross*): (DenseMatrix[Double], Map[Eq, Range]) = {
+      val (h, scores, at) = stack(eqs, cross)
+      (LinAlg.sandwichStep(h, meat(scores, nUsers, tMax), nUsers, h.rows), at)
+    }
 
-      // treatment-level blocks of beta_s; each de-centered by its own
-      // first RAW column (pwcls.R:192-209)
-      val bounds = (Seq(1) ++ dividerIdx :+ (dS + 1)).distinct.sorted
-      val blocks: Seq[Range] = bounds.sliding(2).map { p => (p.head - 1) until (p(1) - 1) }.toSeq
-      val nLevels = blocks.size
-      val xSrawBlocks = blocks.map { b =>
-        val firstCol = xS.terms(b.head)._2
-        // pow(x,-1) not `/`: R yields Inf on zero divisors (then NaN in
-        // downstream scores); ANSI division would error instead
-        Design(b.map(i => xS.terms(i))).scale(pow(firstCol, -1.0))
+    private final class Prop(val pHat: V, val aC: V, val pHatA: V, val w: V) {
+      def eq(m: Batch): Eq = {
+        val s = m.sum(pHat * (1.0 - pHat))
+        new Eq(cbind(a - pHat), () => DenseMatrix.fill(1, 1)(s()))
       }
-      val ceCols = blocks.zip(xSrawBlocks).map { case (b, raw) =>
-        raw.dot(b.map(i => betaSv(i)))
-      }
-      var dfCe = df
-      for ((c, j) <- ceCols.zipWithIndex) dfCe = dfCe.withColumn(s"__ce$j", c)
+      /** x / a_centered */
+      def raw(x: X): X = rscale(x, 1.0 / aC)
+    }
 
-      // second stage: multi-response OLS over internal rows — ONE shared
-      // Gramian of [Xr | ce_1..ce_L], multiple RHS solves (M4)
-      val xRr = betaROf(dfCe)
-      val dR = xRr.width
-      val dfInt = dfCe.filter(col("is_internal"))
-      val aug = xRr ++ Design(ceCols.indices.map(j => (s"__ce$j", col(s"__ce$j"))))
-      val p2 = new MomentPass(dfInt)
-      val g2 = p2.gram(aug, lit(1.0))
-      p2.run()
-      val g2m = p2.matrix(g2)
-      val xtx = g2m(0 until dR, 0 until dR).toDenseMatrix
-      val betaRBlocks = ceCols.indices.map { j =>
-        LinAlg.solveVec(xtx, DenseVector((0 until dR).map(i => g2m(i, dR + j)).toArray))
-      }
-      val betaRv = DenseVector.vertcat(betaRBlocks: _*)
+    /** Intercept-only treatment propensity a ~ 1 and the columns derived
+      * from it (wcls.R:122-135, P1-P3); `extra` values are kept with them. */
+    private def propensity(pHAUse: V, extra: V*): (Prop, Seq[V]) = {
+      val x = cbind(one)
+      val (alpha, _) = logistic(x, a)
+      val pHat = sigmoid(mv(x, alpha))
+      val pHatA = a * pHat + (1.0 - a) * (1.0 - pHat)
+      val k = keep(Seq(pHat, a - pHat, pHatA, pHatA / pHAUse) ++ extra, cache = true)
+      (new Prop(k(0), k(1), k(2), k(3)), k.drop(4))
+    }
 
-      val dAh = pHDesign.map(_.width).getOrElse(0)
-      val dAs = pSDesign.width
-      val d = dAh + dAs + dH + dS + dR * nLevels
-      val xSraw = xSrawBlocks.reduce(_ ++ _) // block-wise raw (order preserved)
+    /** The weighted regression y ~ [xh | xa] with weights w, fitted. */
+    private final class Wls(xh: X, val xa: X, w: V) {
+      val x: X = hcat(xh, xa)
+      val dH: Int = width(xh)
+      val beta: DenseVector[Double] = wls(x, y, w)
+      val betaA: DenseVector[Double] = beta(dH until dH + width(xa))
+      val wres: V = w * (y - mv(x, beta))
+      def eq(m: Batch): Eq = new Eq(rscale(x, wres), m.gram(x, w))
 
-      val resid = col("y") - xHs.dot(beta.toArray.toSeq)
-      val wres = col("w") * resid
-      val fitS = xS.dot(betaSv.toArray.toSeq)
-      val isI = col("is_internal").cast("double")
-
-      // scores
-      var scores = Design(Seq.empty[(String, Column)])
-      pHDesign.foreach { dsg =>
-        scores = scores ++ dsg.scale(col("a") - col("p_h_hat"))
-      }
-      scores = scores ++ pSDesign.scale(col("a") - col("p_s_hat"))
-      scores = scores ++ xHs.scale(wres)
-      for (j <- 0 until nLevels) {
-        val betaRj = betaRBlocks(j)
-        scores = scores ++ xRr.scale(
-          isI * (col(s"__ce$j") - xRr.dot(betaRj.toArray.toSeq)))
+      /** The score's derivative in the propensity intercept
+        * (wcls.R:85-95); `raw` is xa de-centered. */
+      def inPropensity(m: Batch, pr: Prop, raw: X): () => DenseMatrix[Double] = {
+        val logd = -(a * 2.0 - 1.0) * pr.pHat * (1.0 - pr.pHat) / pr.pHatA
+        val prd = -(1.0 - pr.pHat)
+        val t1 = m.tvec(rscale(x, wres), logd)
+        val t2 = m.tvec(rscale(hcat(zeros(dH), rscale(raw, -pr.pHat)), wres), prd)
+        val t3 = m.tvec(rscale(x, pr.pHat * mv(xa, betaA) / pr.aC * w), prd)
+        () => (t1() + t2() + t3()).toDenseMatrix.t
       }
 
-      // Hessian
-      val pHatS = col("p_s_hat"); val pHatSA = col("p_s_hat_a")
-      val logd = (-(lit(2.0) * col("a") - 1.0) * pHatS * (lit(1.0) - pHatS)) / pHatSA
-      val lpd = -(lit(1.0) - pHatS)
-      val blkNeg = Design(Design.zeros(dH).map(("z", _))) ++ xSraw.scale(-pHatS)
-
-      val pass = new MomentPass(dfCe)
-      val gAh = pHDesign.map(dsg => pass.gram(dsg, col("p_h_hat") * (lit(1.0) - col("p_h_hat"))))
-      val gAs = pass.gram(pSDesign, pHatS * (lit(1.0) - pHatS))
-      val gHs = pass.gram(xHs, col("w"))
-      val c1 = pass.cross(xHs, pSDesign, wres * logd)
-      val c2 = pass.cross(blkNeg, pSDesign, wres * lpd)
-      val c3 = pass.cross(xHs, pSDesign, pHatS * fitS / col("a_centered") * col("w") * lpd)
-      val cObs = (pHDesign, alphaHFit) match {
-        case (Some(dsg), Some(_)) =>
-          val pH = col("p_h_hat")
-          val logdh = (-(lit(2.0) * col("a") - 1.0) * pH * (lit(1.0) - pH)) / col("p_h_a_use")
-          Some(pass.cross(xHs, dsg, wres * logdh))
-        case _ => None
+      /** The score's derivative in the tilt coefficients. */
+      def inTilt(m: Batch, t: Tilt): () => DenseMatrix[Double] = {
+        val c = m.tdot(rscale(x, isE * wres), t.xo)
+        () => -c()
       }
-      val gR = pass.gram(xRr, isI)
-      val cRSBlocks = xSrawBlocks.map(raw => pass.cross(xRr, raw, isI))
-      pass.run()
+    }
 
-      val h = DenseMatrix.zeros[Double](d, d)
-      var cur = 0
-      gAh.foreach { g => h(0 until dAh, 0 until dAh) := pass.matrix(g); cur = dAh }
-      val sAs = cur; h(sAs until sAs + dAs, sAs until sAs + dAs) := pass.matrix(gAs)
-      val sHs = sAs + dAs
-      h(sHs until sHs + dH + dS, sHs until sHs + dH + dS) := pass.matrix(gHs)
-      h(sHs until sHs + dH + dS, sAs until sAs + dAs) :=
-        pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-      cObs.foreach { c =>
-        h(sHs until sHs + dH + dS, 0 until dAh) := pass.matrix(c)
+    private final class Tilt(val xo: X, val warning: Boolean, val raw: V, val tilt: V, val wT: V) {
+      def eq(m: Batch): Eq = {
+        val pi = piInternal
+        val num = raw * (pi / (1.0 - pi))
+        val p = num / (num + 1.0)
+        new Eq(rscale(xo, isI - p), m.gram(xo, p * (1.0 - p)))
       }
-      val sR = sHs + dH + dS
-      for (j <- 0 until nLevels) {
-        val rj = (sR + j * dR) until (sR + (j + 1) * dR)
-        h(rj, rj) := pass.matrix(gR)
-        val sCols = blocks(j).map(sHs + dH + _)
-        val cm = pass.matrix(cRSBlocks(j))
-        for ((sc, k) <- sCols.zipWithIndex; ri <- 0 until dR)
-          h(rj(ri), sc) = -cm(ri, k)
+    }
+
+    /** Exponential tilt with the spline-df fallback ladder
+      * (etwcls.R:112-130, M8 + P7); keeps the tilt ratios and w·tilt. */
+    private def tilt(w: V): Tilt = {
+      var out: (X, DenseVector[Double], Boolean) = null
+      for ((dfP, deg) <- Seq((3, 2), (2, 2), (1, 1)) if out == null) {
+        val x = splineDesign(b)(dfP, deg, interact = true)
+        val (omega, warn) = logistic(x, isI)
+        if (!warn || dfP == 1) out = (x, omega, width(x) <= 10)
       }
+      val (xo, omegaRaw, warning) = out
+      val omega = omegaRaw.copy
+      omega(0) -= math.log(piInternal / (1.0 - piInternal))
+      val raw = exp(mv(xo, omega))
+      val ratio = isI + isE * raw
+      val Seq(rawK, ratioK, wT) = keep(Seq(raw, ratio, w * ratio), cache = true)
+      new Tilt(xo, warning, rawK, ratioK, wT)
+    }
 
-      val meat = Sandwich.meat(dfCe, scores, col("__cluster"))
-      val sand = LinAlg.sandwichStep(h, meat, info.nUsers, d)
-      inference(sand, sR until d, betaRv, betaRTrue, info.n, tiltWarning = false)
-    } finally df.unpersist()
-  }
+    /** OLS of each `ys` on the design `x` (internal rows): one Gramian. */
+    private def ols(x: X, ys: Seq[V]): (() => DenseMatrix[Double], Seq[DenseVector[Double]]) = {
+      val m = batch()
+      val g = m.tdot(x, x)
+      val rhs = ys.map(m.tvec(x, _))
+      m.run()
+      (g, rhs.map(r => g() \ r()))
+    }
 
-  // =====================================================================
-  // ET-WCLS (etwcls.R): tilted WCLS with 3 pooling modes.
-  // =====================================================================
-  def etwcls(df0: DataFrame, betaRTrue: DenseVector[Double],
-             betaH: Design, betaROf: Column => Design, pRDesign: Design,
-             poolingMethod: String): EstimateResult = {
-    val info = panelInfo(df0)
-    val prop = fitPropensity(df0, pRDesign, "p_r_hat", "a_centered", "p_r_hat_a", "w")
-    val dfProp = prop.dfEnriched.cache()
-    try {
-      val tilt = fitTilt(dfProp, info.piInternal)
-      val dfE0 = tilt.df.withColumn("w_and_tilt", col("w") * col("tilt_ratios"))
-      val df = withBlockCluster(dfE0, info).cache()
-      try {
-        val xR = betaROf(col("a_centered"))
-        val xHr = betaH ++ xR
-        val beta = Glm.wls(df, xHr, col("y"), col("w_and_tilt"))
-        val dH = betaH.width; val dR = xR.width; val dA = pRDesign.width
-        val dO = tilt.design.width
-        val d = dA + dO + dH + dR
-        val betaRv = beta(dH until dH + dR)
+    /** The equation of an internal-rows regression of `ce` on `x`. */
+    private def olsEq(x: X, ce: V, beta: DenseVector[Double], g: () => DenseMatrix[Double]): Eq =
+      new Eq(expand(rscale(x, ce - mv(x, beta)), internal = true), g)
 
-        val resid = col("y") - xHr.dot(beta.toArray.toSeq)
-        val wres = col("w_and_tilt") * resid
-        val fitR = xR.dot(betaRv.toArray.toSeq)
+    private def inner(at: Map[Eq, Range], from: Eq, skip: Int, to: Eq): Range =
+      (at(from).start + skip) until at(to).end
 
-        val (tiltScores, tiltW) = tiltScoreCols(tilt.design, info.piInternal)
-        val scores = pRDesign.scale(col("a") - col("p_r_hat")) ++
-          tiltScores ++ xHr.scale(wres)
+    // =================================================================
+    // WCLS (wcls.R:116-194): estimate_p_r = TRUE, no tilt.
+    // =================================================================
+    def wcls(): EstimateResult = {
+      val (pr, _) = propensity(pHA)
+      val s = new Wls(betaH(b), betaR(b)(pr.aC), pr.w)
+      val m = batch()
+      val (eA, eS) = (pr.eq(m), s.eq(m))
+      val chain = s.inPropensity(m, pr, pr.raw(s.xa))
+      m.run()
+      val (sand, at) = sandwich(Seq(eA, eS), new Cross(eS, eA, chain))
+      val r = inner(at, eS, s.dH, eS)
+      estimate(s.betaA, sand(r, r), tiltWarning = false)
+    }
 
-        val pHat = col("p_r_hat"); val pHatA = col("p_r_hat_a")
-        val logd = (-(lit(2.0) * col("a") - 1.0) * pHat * (lit(1.0) - pHat)) / pHatA
-        val prd = -(lit(1.0) - pHat)
-        val xRraw = xR.scale(lit(1.0) / col("a_centered"))
-        val blkNeg = Design(Design.zeros(dH).map(("z", _))) ++ xRraw.scale(-pHat)
-        val isE = col("is_external").cast("double")
-
-        val pass = new MomentPass(df)
-        val gA = pass.gram(pRDesign, pHat * (lit(1.0) - pHat))
-        val gO = pass.gram(tilt.design, tiltW)
-        val gHr = pass.gram(xHr, col("w_and_tilt"))
-        val c1 = pass.cross(xHr, pRDesign, wres * logd)
-        val c2 = pass.cross(blkNeg, pRDesign, wres * prd)
-        val c3 = pass.cross(xHr, pRDesign,
-          pHat * fitR / col("a_centered") * col("w") * col("tilt_ratios") * prd)
-        val cO = pass.cross(xHr, tilt.design, isE * wres)
-        pass.run()
-
-        val h = DenseMatrix.zeros[Double](d, d)
-        h(0 until dA, 0 until dA) := pass.matrix(gA)
-        h(dA until dA + dO, dA until dA + dO) := pass.matrix(gO)
-        val sHr = dA + dO
-        h(sHr until d, sHr until d) := pass.matrix(gHr)
-        h(sHr until d, 0 until dA) := pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-        h(sHr until d, dA until dA + dO) := -pass.matrix(cO)
-
-        val meat = Sandwich.meat(df, scores, col("__cluster"))
-        val sand = LinAlg.sandwichStep(h, meat, info.nUsers, d)
-
-        val posR = (sHr + dH) until d
-        val v = DenseMatrix.tabulate(dR, dR)((i, j) => sand(posR(i), posR(j)))
-        require(dR % 2 == 0,
-          s"ET pooling expects two stacked study blocks (even dR), got dR=$dR")
-        val (pooled, vp) = poolingMethod match {
-          case "full" =>
-            Pooling.full(betaRv, v, dR / 2, 2)
-          case "kronecker" =>
-            // 2 study blocks of dR/2 coefs: the Kronecker weight reads the
-            // per-study precision at each block's leading coefficient
-            val b = dR / 2
-            val lam = LinAlg.cholInv(v)
-            val lt = DenseMatrix((lam(0, 0), lam(0, b)), (lam(b, 0), lam(b, b)))
-            Pooling.kroneckerLike(betaRv, v, lt)
-          case "equal" =>
-            Pooling.kroneckerLike(betaRv, v, DenseMatrix.eye[Double](2) * 0.5)
-          case other =>
-            throw new IllegalArgumentException(
-              s"unknown ET pooling method '$other'; valid: full, kronecker, equal")
+    // =================================================================
+    // P-WCLS (pwcls.R); `observational` estimates p_h (pwcls.R:149-156).
+    // =================================================================
+    def pwcls(observational: Boolean, betaSOf: Formula, dividerIdx: Seq[Int]): EstimateResult = {
+      val xAh = pHModel(b)
+      val obs =
+        if (!observational) Nil
+        else {
+          val (alphaH, _) = logistic(xAh, a)
+          val pHHat = sigmoid(mv(xAh, alphaH))
+          Seq(pHHat, a * pHHat + (1.0 - a) * (1.0 - pHHat))
         }
-        val se = LinAlg.diagSqrt(vp)
-        val err = pooled - betaRTrue
-        EstimateResult(pooled, se, vp, err.t * LinAlg.solveVec(vp, err), err /:/ se,
-          info.n, d, tilt.warning)
-      } finally df.unpersist()
-    } finally dfProp.unpersist()
-  }
+      val (pr, kept) = propensity(if (observational) obs(1) else pHA, obs: _*)
+      val s = new Wls(betaH(b), betaSOf(b)(pr.aC), pr.w)
 
-  // =====================================================================
-  // A-WCLS (methods/awcls.R — extras-tier): plug-in projection
-  // β_r = Γ β_s, Γ from a cubic regression of x2 on x1 (internal rows),
-  // delta-method variance. Reference quirks kept: n_users = max(user_id),
-  // dof scale n/(n-d). Distributed mirror of LocalBattery.awclsMethod
-  // (equivalence-tested in AwclsEquivalenceSpec).
-  // =====================================================================
-  def awcls(df0: DataFrame): EstimateResult = {
-    val betaRTrue = DenseVector(-5.0, -1.0, 0.9, 0.3) // awcls.R:104
-    val info0 = panelInfo(df0)
-    val maxUser = df0.agg(max(col("user_id"))).head().getLong(0).toInt
-    val info = info0.copy(nUsers = maxUser,
-      tMax = (info0.n / maxUser).toInt) // floor, awcls.R:80
-    val prop = fitPropensity(df0, Battery.aIntercept, "p_s_hat", "a_centered", "p_s_hat_a", "w")
-    val df = withBlockCluster(prop.dfEnriched, info).cache()
-    try {
-      val xH = Battery.betaH
-      val xS = Battery.betaS(col("a_centered"))
-      val xHs = xH ++ xS
-      val beta = Glm.wls(df, xHs, col("y"), col("w"))
-      val dH = xH.width; val dS = xS.width
-      val betaSv = beta(dH until dH + dS)
+      // treatment-level blocks of beta_s, each de-centered by its own
+      // first column (pwcls.R:192-209)
+      val bounds = (Seq(1) ++ dividerIdx :+ (width(s.xa) + 1)).distinct.sorted
+      val blocks = bounds.sliding(2).map(q => (q.head - 1) until (q(1) - 1)).toSeq
+      val raws = blocks.map(r => rscale(columns(s.xa, r), 1.0 / column(s.xa, r.head)))
+      val ces = keep(blocks.zip(raws).map { case (r, raw) => mv(raw, s.betaA(r)) })
+      // second stage over internal rows, one solve per level (M4)
+      val xr = rows(pwclsR(b), internal = true)
+      val ceI = ces.map(rowsOf(_, internal = true))
+      val (g, betaRs) = ols(xr, ceI)
 
+      val m = batch()
+      val eH = kept.headOption.map(pHHat =>
+        new Eq(rscale(xAh, a - pHHat), m.gram(xAh, pHHat * (1.0 - pHHat))))
+      val (eA, eS) = (pr.eq(m), s.eq(m))
+      val chain = s.inPropensity(m, pr, hcat(raws: _*))
+      val chainH = kept.headOption.map { pHHat =>
+        val logdh = -(a * 2.0 - 1.0) * pHHat * (1.0 - pHHat) / kept(1)
+        m.tdot(rscale(s.x, s.wres), rscale(xAh, logdh))
+      }
+      val eR = ceI.zip(betaRs).map { case (ce, br) => olsEq(xr, ce, br, g) }
+      val hRS = raws.map(raw => m.tdot(xr, rows(raw, internal = true)))
+      m.run()
+      val (sand, at) = sandwich(eH.toSeq ++ Seq(eA, eS) ++ eR,
+        Seq(new Cross(eS, eA, chain)) ++
+          eH.zip(chainH).map { case (e, c) => new Cross(eS, e, c) } ++
+          blocks.indices.map(j => new Cross(eR(j), eS, () => -hRS(j)(), s.dH + blocks(j).head)): _*)
+      val r = inner(at, eR.head, 0, eR.last)
+      estimate(DenseVector.vertcat(betaRs: _*), sand(r, r), tiltWarning = false)
+    }
+
+    // =================================================================
+    // ET-WCLS (etwcls.R): tilted WCLS with 3 pooling modes.
+    // =================================================================
+    def etwcls(pooling: String): EstimateResult = {
+      val (pr, _) = propensity(pHA)
+      val t = tilt(pr.w)
+      val s = new Wls(etBetaH(b), etBetaR(b)(pr.aC), t.wT)
+      val m = batch()
+      val (eA, eO, eS) = (pr.eq(m), t.eq(m), s.eq(m))
+      val chain = s.inPropensity(m, pr, pr.raw(s.xa))
+      val inTilt = s.inTilt(m, t)
+      m.run()
+      val (sand, at) = sandwich(Seq(eA, eO, eS), new Cross(eS, eA, chain), new Cross(eS, eO, inTilt))
+
+      val r = inner(at, eS, s.dH, eS)
+      val v = sand(r, r)
+      require(r.size % 2 == 0,
+        s"ET pooling expects two stacked study blocks (even dR), got dR=${r.size}")
+      val half = r.size / 2
+      val (pooled, vp) = pooling match {
+        case "full" => Pooling.full(s.betaA.copy, v, half, 2)
+        case "kronecker" =>
+          // the Kronecker weight reads the per-study precision at each
+          // block's leading coefficient
+          val lam = LinAlg.cholInv(v)
+          Pooling.kroneckerLike(s.betaA, v,
+            DenseMatrix((lam(0, 0), lam(0, half)), (lam(half, 0), lam(half, half))))
+        case "equal" => Pooling.kroneckerLike(s.betaA, v, DenseMatrix.eye[Double](2) * 0.5)
+        case other =>
+          throw new IllegalArgumentException(
+            s"unknown ET pooling method '$other'; valid: full, kronecker, equal")
+      }
+      estimate(pooled, vp, t.warning)
+    }
+
+    // =================================================================
+    // DR-WCLS (drwcls.R): pseudo-outcome + closed-form DRET + 2-block pool.
+    // =================================================================
+    def drwcls(): EstimateResult = {
+      val (pr, _) = propensity(pHA)
+      val xh = betaH(b)
+      val s = new Wls(xh, betaS(b)(pr.aC), pr.w)
+      val xsRaw = pr.raw(s.xa)
+      // counterfactual predictions (drwcls.R:163-173, P10): the same
+      // linear predictor at a_centered := 1-p̂ and := -p̂
+      val fH = mv(xh, s.beta(0 until s.dH))
+      val f1e = fH + mv(betaS(b)(1.0 - pr.pHat), s.betaA)
+      val f0e = fH + mv(betaS(b)(-pr.pHat), s.betaA)
+      val fAe = a * f1e + (1.0 - a) * f0e
+      val ytde = a - (1.0 - pH)
+      val ytfe = (y - fAe) / ytde
+      val cee = mv(xsRaw, s.betaA)
+      val Seq(ce, f1, f0, fA, ytd, ytf, yt) =
+        keep(Seq(cee, f1e, f0e, fAe, ytde, ytfe, ytfe + cee))
+
+      val t = tilt(pr.w)
+      val pi = piInternal
+      val xr = pwclsR(b)
+      val xrI = rows(xr, internal = true)
+      val xrE = rows(xr, internal = false)
+      // DRP (OLS ce ~ x on internal rows, drwcls.R:215) and the DRET
+      // closed form (drwcls.R:218-223) share one batch
+      val m1 = batch()
+      val gI = m1.tdot(xrI, xrI)
+      val cI = m1.tvec(xrI, rowsOf(ce, internal = true))
+      val cE = m1.tvec(xrE, rowsOf(t.tilt * ytf, internal = false))
+      m1.run()
+      val betaRv = gI() \ cI()
+      val betaRet = (gI() / pi) \ (cI() / pi + cE() / (1.0 - pi))
+      val retRes = f1 - f0 - mv(xr, betaRet)
+
+      val m = batch()
+      val (eA, eS, eO) = (pr.eq(m), s.eq(m), t.eq(m))
+      val ePi = new Eq(cbind(isI - pi), () => DenseMatrix.fill(1, 1)(n.toDouble))
+      val eR = olsEq(xrI, rowsOf(yt, internal = true), betaRv, gI)
+      val eRet = new Eq(rscale(xr, isE * t.tilt * (y - fA) / (ytd * (1.0 - pi)) + isI * retRes / pi),
+        () => gI() / pi)
+      val chain = s.inPropensity(m, pr, xsRaw)
+      val hRH = m.tdot(xrI, rows(rscale(xh, 1.0 / ytd), internal = true))
+      val hRS = m.tdot(xrI, xminus(rows(rscale(s.xa, 1.0 / ytd), internal = true),
+        rows(xsRaw, internal = true)))
+      val hEO = m.tdot(xrE, rows(rscale(t.xo, t.tilt * ytf), internal = false))
+      val hEH = m.tdot(xrE, rows(rscale(xh, t.tilt / ytd), internal = false))
+      val hES = m.tdot(xrE, rows(rscale(s.xa, t.tilt / ytd), internal = false))
+      val hIS = m.tdot(xrI, rows(xsRaw, internal = true))
+      val hPi = m.tvec(rscale(xr,
+        isE * (-1.0 / ((1.0 - pi) * (1.0 - pi))) * t.tilt * (y - fA) / ytd +
+          isI * (1.0 / (pi * pi)) * retRes), one)
+      m.run()
+      val (sand, at) = sandwich(Seq(eA, eS, eO, ePi, eR, eRet),
+        new Cross(eS, eA, chain),
+        new Cross(eR, eS, () => DenseMatrix.horzcat(hRH(), hRS())),
+        new Cross(eRet, eS, () =>
+          DenseMatrix.horzcat(hEH() / (1.0 - pi), hES() / (1.0 - pi) - hIS() / pi)),
+        new Cross(eRet, eO, () => -hEO() / (1.0 - pi)),
+        new Cross(eRet, ePi, () => hPi().toDenseMatrix.t))
+      val r = inner(at, eR, 0, eRet)
+      val (pooled, vp) = Pooling.full(DenseVector.vertcat(betaRv, betaRet), sand(r, r), eR.d, 2)
+      estimate(pooled, vp, t.warning)
+    }
+
+    // =================================================================
+    // PET-WCLS (petwcls.R): P-stage + ET-stage, 3-block pooling.
+    // =================================================================
+    def petwcls(): EstimateResult = {
+      val (pr, _) = propensity(pHA)
+      val t = tilt(pr.w)
+      val xh = betaH(b)
+      val s1 = new Wls(xh, betaS(b)(pr.aC), pr.w)
+      val xsRaw = pr.raw(s1.xa)
+      val Seq(ce) = keep(Seq(mv(xsRaw, s1.betaA)))
+      val s2 = new Wls(xh, etBetaR(b)(pr.aC), t.wT)
+      val xp = rows(pwclsR(b), internal = true)
+      val ceI = rowsOf(ce, internal = true)
+      val (g, Seq(betaRv)) = ols(xp, Seq(ceI))
+
+      val m = batch()
+      val (eA, eO, e1, e2) = (pr.eq(m), t.eq(m), s1.eq(m), s2.eq(m))
+      val eR = olsEq(xp, ceI, betaRv, g)
+      val chain1 = s1.inPropensity(m, pr, xsRaw)
+      val chain2 = s2.inPropensity(m, pr, pr.raw(s2.xa))
+      val inTilt = s2.inTilt(m, t)
+      val hRS = m.tdot(xp, rows(xsRaw, internal = true))
+      m.run()
+      val (sand, at) = sandwich(Seq(eA, eO, e1, e2, eR),
+        new Cross(e1, eA, chain1), new Cross(e2, eA, chain2), new Cross(e2, eO, inTilt),
+        new Cross(eR, e1, () => -hRS(), s1.dH))
+      // pool 3 blocks: beta_r_wcls (2 blocks of d_r) + beta_r (1 block)
+      val r = inner(at, e2, s2.dH, eR)
+      val (pooled, vp) = Pooling.full(DenseVector.vertcat(s2.betaA, betaRv), sand(r, r), eR.d, 3)
+      estimate(pooled, vp, t.warning)
+    }
+
+    // =================================================================
+    // A-WCLS (methods/awcls.R — extras-tier, flagged "not checked
+    // thoroughly" upstream; SURVEY.md §7.4.5 keeps its quirks:
+    // n_users = max(user_id), dof scale n/(n-d)). Plug-in projection
+    // β_r = Γ β_s with Γ from a cubic regression of x2 on x1 (internal
+    // rows), delta-method variance.
+    // =================================================================
+    def awcls(): EstimateResult = {
+      val (pr, _) = propensity(pHA)
+      val s = new Wls(betaH(b), betaS(b)(pr.aC), pr.w)
+      val dS = width(s.xa)
       // Gamma: x2 ~ x1 + x1^2 + x1^3 on internal rows (awcls.R:126)
-      val xG = Design(Design.intercept, ("x1", col("x1")),
-        ("x1^2", col("x1") * col("x1")), ("x1^3", col("x1") * col("x1") * col("x1")))
-      val dR = xG.width
-      val gamma = Glm.wls(df.filter(col("is_internal")), xG, col("x2"), lit(1.0))
+      val xg = rows(cbind(one, x1, x1 * x1, x1 * x1 * x1), internal = true)
+      val x2I = rowsOf(x2, internal = true)
+      val (g, Seq(gamma)) = ols(xg, Seq(x2I))
+      val dR = width(xg)
       val bigGamma = DenseMatrix.zeros[Double](dR, dS)
       bigGamma(0, 0) = 1.0; bigGamma(1, 1) = 1.0
       for (i <- 0 until dR) bigGamma(i, 2) = gamma(i)
-      val betaR = bigGamma * betaSv
 
-      val dA = 1; val d = dA + dH + dS + dR
-      val pHat = col("p_s_hat"); val pHatA = col("p_s_hat_a")
-      val resid = col("y") - xHs.dot(beta.toArray.toSeq)
-      val wres = col("w") * resid
-      val fitS = xS.dot(betaSv.toArray.toSeq)
-      val isI = col("is_internal").cast("double")
-      val xSraw = xS.scale(lit(1.0) / col("a_centered"))
-
-      val scores = Battery.aIntercept.scale(col("a") - pHat) ++
-        xHs.scale(wres) ++
-        xG.scale(isI * (col("x2") - xG.dot(gamma.toArray.toSeq)))
-
-      val logd = (-(lit(2.0) * col("a") - 1.0) * pHat * (lit(1.0) - pHat)) / pHatA
-      val lpd = -(lit(1.0) - pHat)
-      val blkNeg = Design(Design.zeros(dH).map(("z", _))) ++ xSraw.scale(-pHat)
-
-      val pass = new MomentPass(df)
-      val gA = pass.gram(Battery.aIntercept, pHat * (lit(1.0) - pHat))
-      val gHs = pass.gram(xHs, col("w"))
-      val c1 = pass.cross(xHs, Battery.aIntercept, wres * logd)
-      val c2 = pass.cross(blkNeg, Battery.aIntercept, wres * lpd)
-      val c3 = pass.cross(xHs, Battery.aIntercept,
-        pHat * fitS / col("a_centered") * col("w") * lpd)
-      val gG = pass.gram(xG, isI)
-      pass.run()
-
-      val h = DenseMatrix.zeros[Double](d, d)
-      h(0, 0) = pass.matrix(gA)(0, 0)
-      h(dA until dA + dH + dS, dA until dA + dH + dS) := pass.matrix(gHs)
-      h(dA until dA + dH + dS, 0 until dA) :=
-        pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-      val sG = dA + dH + dS
-      h(sG until d, sG until d) := pass.matrix(gG)
-
-      val meat = Sandwich.meat(df, scores, col("__cluster"))
-      // awcls.R:84: dof scale uses n/(n-d), not n_users/(n_users-d)
-      val lower = breeze.linalg.cholesky(meat)
-      val half = h \ lower
-      val sand = (half * half.t) * (info.n.toDouble / (info.n - d).toDouble)
-
-      val posTheta = (dA + dH) until d
+      val m = batch()
+      val (eA, eS) = (pr.eq(m), s.eq(m))
+      val eG = olsEq(xg, x2I, gamma, g)
+      val chain = s.inPropensity(m, pr, pr.raw(s.xa))
+      m.run()
+      val (h, scores, at) = stack(Seq(eA, eS, eG), Seq(new Cross(eS, eA, chain)))
+      // awcls.R:80-84: users counted as max(user_id); dof scale n/(n-d)
+      val nU = maxUserId.toInt
+      val sand = LinAlg.sandwichStep(h, meat(scores, nU, (n / nU).toInt), n.toInt, h.rows)
+      val posTheta = inner(at, eS, s.dH, eG)
       val vTheta = DenseMatrix.tabulate(dS + dR, dS + dR)((i, j) =>
         sand(posTheta(i), posTheta(j)))
-      val jTheta = DenseMatrix.horzcat(bigGamma, DenseMatrix.eye[Double](dR) * betaSv(2))
+      val jTheta = DenseMatrix.horzcat(bigGamma, DenseMatrix.eye[Double](dR) * s.betaA(2))
       val vBetaR = jTheta * vTheta * jTheta.t
-      val se = LinAlg.diagSqrt(vBetaR)
-      val err = betaR - betaRTrue
-      EstimateResult(betaR, se, vBetaR, err.t * LinAlg.solveVec(vBetaR, err), err /:/ se,
-        info.n, d, tiltWarning = false)
-    } finally df.unpersist()
-  }
-
-  // =====================================================================
-  // DR-WCLS (drwcls.R): pseudo-outcome + closed-form DRET + 2-block pool.
-  // =====================================================================
-  def drwcls(df0: DataFrame, betaRTrue: DenseVector[Double],
-             betaH: Design, betaSOf: Column => Design, betaROf: DataFrame => Design,
-             pSDesign: Design): EstimateResult = {
-    val info = panelInfo(df0)
-    val fS = Glm.logistic(df0, pSDesign, col("a"))
-    val pS = fS.predict(pSDesign)
-    val dfE0 = df0
-      .withColumn("p_s_hat", pS)
-      .withColumn("a_centered", col("a") - col("p_s_hat"))
-      .withColumn("p_s_hat_a", col("a") * col("p_s_hat") + (lit(1.0) - col("a")) * (lit(1.0) - col("p_s_hat")))
-      .withColumn("w", col("p_s_hat_a") / col("p_h_a"))
-    val dfP = withBlockCluster(dfE0, info).cache()
-    try {
-      val xS = betaSOf(col("a_centered"))
-      val xHs = betaH ++ xS
-      val beta = Glm.wls(dfP, xHs, col("y"), col("w"))
-      val dH = betaH.width; val dS = xS.width
-      val betaHv = beta(0 until dH); val betaSv = beta(dH until dH + dS)
-
-      val xSraw = xS.scale(lit(1.0) / col("a_centered"))
-      val ce = xSraw.dot(betaSv.toArray.toSeq)
-      // counterfactual predictions (drwcls.R:163-173, P10): evaluate the
-      // same linear predictor under a_centered := 1-p̂ / -p̂ — no table clone.
-      val fH = betaH.dot(betaHv.toArray.toSeq)
-      val xS1 = betaSOf(lit(1.0) - col("p_s_hat"))
-      val xS0 = betaSOf(-col("p_s_hat"))
-      val f1 = fH + xS1.dot(betaSv.toArray.toSeq)
-      val f0 = fH + xS0.dot(betaSv.toArray.toSeq)
-      val dfCe = dfP
-        .withColumn("__ce", ce)
-        .withColumn("__f1", f1)
-        .withColumn("__f0", f0)
-        .withColumn("__fa", col("a") * col("__f1") + (lit(1.0) - col("a")) * col("__f0"))
-        .withColumn("__ytd", col("a") - (lit(1.0) - col("p_h")))
-        .withColumn("__ytf", (col("y") - col("__fa")) / col("__ytd"))
-        .withColumn("__yt", col("__ytf") + col("__ce"))
-
-      val tilt = fitTilt(dfCe, info.piInternal)
-      val df = tilt.df.cache()
-      try {
-        val isI = col("is_internal").cast("double")
-        val isE = col("is_external").cast("double")
-        val xRr = betaROf(df)
-        val dR = xRr.width
-        val pi = info.piInternal
-
-        // DRP point estimate: OLS ce ~ Xr on internal (drwcls.R:215)
-        val betaRv = Glm.wls(df.filter(col("is_internal")), xRr, col("__ce"), lit(1.0))
-
-        // DRET closed form (drwcls.R:218-223): one fused pass
-        val pre = new MomentPass(df)
-        val gInt = pre.gram(xRr, isI)
-        val vCe = pre.vsum(xRr, isI * col("__ce"))
-        val vExt = pre.vsum(xRr, isE * col("tilt_ratios") * col("__ytf"))
-        pre.run()
-        val lhs = pre.matrix(gInt) / pi
-        val rhs = pre.vector(vCe) / pi + pre.vector(vExt) / (1.0 - pi)
-        val betaRet = LinAlg.solveVec(lhs, rhs)
-
-        val dAs = pSDesign.width; val dO = tilt.design.width
-        val d = dAs + dH + dS + dO + 1 + 2 * dR
-
-        val resid = col("y") - xHs.dot(beta.toArray.toSeq)
-        val wres = col("w") * resid
-        val fitS = xS.dot(betaSv.toArray.toSeq)
-        val (tiltScores, tiltW) = tiltScoreCols(tilt.design, pi)
-        val retResidI = col("__f1") - col("__f0") - xRr.dot(betaRet.toArray.toSeq)
-
-        val scores =
-          pSDesign.scale(col("a") - col("p_s_hat")) ++
-          xHs.scale(wres) ++
-          tiltScores ++
-          Design(Seq(("pi", isI - lit(pi)))) ++
-          xRr.scale(isI * (col("__yt") - xRr.dot(betaRv.toArray.toSeq))) ++
-          xRr.scale(isE * col("tilt_ratios") * (col("y") - col("__fa")) / (col("__ytd") * lit(1.0 - pi)) +
-                    isI * retResidI / lit(pi))
-
-        val pHatS = col("p_s_hat"); val pHatSA = col("p_s_hat_a")
-        val logd = (-(lit(2.0) * col("a") - 1.0) * pHatS * (lit(1.0) - pHatS)) / pHatSA
-        val lpd = -(lit(1.0) - pHatS)
-        val blkNeg = Design(Design.zeros(dH).map(("z", _))) ++ xSraw.scale(-pHatS)
-
-        val pass = new MomentPass(df)
-        val gAs = pass.gram(pSDesign, pHatS * (lit(1.0) - pHatS))
-        val gHs = pass.gram(xHs, col("w"))
-        val c1 = pass.cross(xHs, pSDesign, wres * logd)
-        val c2 = pass.cross(blkNeg, pSDesign, wres * lpd)
-        val c3 = pass.cross(xHs, pSDesign, pHatS * fitS / col("a_centered") * col("w") * lpd)
-        val gO = pass.gram(tilt.design, tiltW)
-        val gR = pass.gram(xRr, isI)
-        val cRH = pass.cross(xRr, betaH, isI / col("__ytd"))
-        val cRS1 = pass.cross(xRr, xS, isI / col("__ytd"))
-        val cRS2 = pass.cross(xRr, xSraw, isI)
-        val cEtO = pass.cross(xRr, tilt.design, isE * col("tilt_ratios") * col("__ytf"))
-        val cEtH = pass.cross(xRr, betaH, isE * col("tilt_ratios") / col("__ytd"))
-        val cEtS = pass.cross(xRr, xS, isE * col("tilt_ratios") / col("__ytd"))
-        val vPi = pass.vsum(xRr,
-          lit(-1.0 / ((1.0 - pi) * (1.0 - pi))) * isE * col("tilt_ratios") * (col("y") - col("__fa")) / col("__ytd") +
-          lit(1.0 / (pi * pi)) * isI * retResidI)
-        pass.run()
-
-        val h = DenseMatrix.zeros[Double](d, d)
-        h(0 until dAs, 0 until dAs) := pass.matrix(gAs)
-        val sHs = dAs
-        h(sHs until sHs + dH + dS, sHs until sHs + dH + dS) := pass.matrix(gHs)
-        h(sHs until sHs + dH + dS, 0 until dAs) :=
-          pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-        val sO = sHs + dH + dS
-        h(sO until sO + dO, sO until sO + dO) := pass.matrix(gO)
-        val pPi = sO + dO
-        h(pPi, pPi) = info.n.toDouble
-        val sR = pPi + 1
-        h(sR until sR + dR, sR until sR + dR) := pass.matrix(gR)
-        h(sR until sR + dR, sHs until sHs + dH) := pass.matrix(cRH)
-        h(sR until sR + dR, sHs + dH until sO) := pass.matrix(cRS1) - pass.matrix(cRS2)
-        val sRet = sR + dR
-        h(sRet until d, sRet until d) := pass.matrix(gR) / pi
-        h(sRet until d, sO until sO + dO) := -pass.matrix(cEtO) / (1.0 - pi)
-        h(sRet until d, sHs until sHs + dH) := pass.matrix(cEtH) / (1.0 - pi)
-        h(sRet until d, sHs + dH until sO) :=
-          pass.matrix(cEtS) / (1.0 - pi) - pass.matrix(cRS2) / pi
-        h(sRet until d, pPi) := pass.vector(vPi)
-
-        val meat = Sandwich.meat(df, scores, col("__cluster"))
-        val sand = LinAlg.sandwichStep(h, meat, info.nUsers, d)
-
-        val posR = sR until d
-        val v = DenseMatrix.tabulate(2 * dR, 2 * dR)((i, j) => sand(posR(i), posR(j)))
-        val stacked = DenseVector.vertcat(betaRv, betaRet)
-        val (pooled, vp) = Pooling.full(stacked, v, dR, 2)
-        val se = LinAlg.diagSqrt(vp)
-        val err = pooled - betaRTrue
-        EstimateResult(pooled, se, vp, err.t * LinAlg.solveVec(vp, err), err /:/ se,
-          info.n, d, tilt.warning)
-      } finally df.unpersist()
-    } finally dfP.unpersist()
-  }
-
-  // =====================================================================
-  // PET-WCLS (petwcls.R): P-stage + ET-stage, 3-block pooling.
-  // =====================================================================
-  def petwcls(df0: DataFrame, betaRTrue: DenseVector[Double],
-              betaH: Design, betaSOf: Column => Design, etBetaROf: Column => Design,
-              betaROf: DataFrame => Design, pSDesign: Design): EstimateResult = {
-    val info = panelInfo(df0)
-    val fS = Glm.logistic(df0, pSDesign, col("a"))
-    val pS = fS.predict(pSDesign)
-    val dfE0 = df0
-      .withColumn("p_s_hat", pS)
-      .withColumn("a_centered", col("a") - col("p_s_hat"))
-      .withColumn("p_s_hat_a", col("a") * col("p_s_hat") + (lit(1.0) - col("a")) * (lit(1.0) - col("p_s_hat")))
-      .withColumn("w", col("p_s_hat_a") / col("p_h_a"))
-    val dfP = withBlockCluster(dfE0, info).cache()
-    try {
-      val tilt = fitTilt(dfP, info.piInternal)
-      val df = tilt.df.withColumn("w_and_tilt", col("w") * col("tilt_ratios")).cache()
-      try {
-        val isI = col("is_internal").cast("double")
-        val isE = col("is_external").cast("double")
-        val pi = info.piInternal
-
-        val xS = betaSOf(col("a_centered"))
-        val xHs = betaH ++ xS
-        val bhs = Glm.wls(df, xHs, col("y"), col("w"))
-        val dH = betaH.width; val dS = xS.width
-        val betaSv = bhs(dH until dH + dS)
-
-        val xSraw = xS.scale(lit(1.0) / col("a_centered"))
-        val ce = xSraw.dot(betaSv.toArray.toSeq)
-        val dfCe = df.withColumn("__ce", ce)
-
-        val xRw = etBetaROf(col("a_centered"))
-        val xHr = betaH ++ xRw
-        val bhr = Glm.wls(dfCe, xHr, col("y"), col("w_and_tilt"))
-        val dR2 = xRw.width
-        val betaRw = bhr(dH until dH + dR2)
-
-        val xRr = betaROf(dfCe)
-        val dR = xRr.width
-        val betaRv = Glm.wls(dfCe.filter(col("is_internal")), xRr, col("__ce"), lit(1.0))
-
-        val dAs = pSDesign.width; val dO = tilt.design.width
-        val d = dAs + dO + 2 * dH + dS + dR2 + dR
-
-        val resid1 = col("y") - xHs.dot(bhs.toArray.toSeq)
-        val wres1 = col("w") * resid1
-        val fitS = xS.dot(betaSv.toArray.toSeq)
-        val resid2 = col("y") - xHr.dot(bhr.toArray.toSeq)
-        val wres2 = col("w") * col("tilt_ratios") * resid2
-        val fitR2 = xRw.dot(betaRw.toArray.toSeq)
-        val (tiltScores, tiltW) = tiltScoreCols(tilt.design, pi)
-
-        val scores =
-          pSDesign.scale(col("a") - col("p_s_hat")) ++
-          tiltScores ++
-          xHs.scale(wres1) ++
-          (betaH ++ xRw).scale(wres2) ++
-          xRr.scale(isI * (col("__ce") - xRr.dot(betaRv.toArray.toSeq)))
-
-        val pHatS = col("p_s_hat"); val pHatSA = col("p_s_hat_a")
-        val logd = (-(lit(2.0) * col("a") - 1.0) * pHatS * (lit(1.0) - pHatS)) / pHatSA
-        val lpd = -(lit(1.0) - pHatS)
-        val xRwRaw = xRw.scale(lit(1.0) / col("a_centered"))
-        val blkNegS = Design(Design.zeros(dH).map(("z", _))) ++ xSraw.scale(-pHatS)
-        val blkNegR = Design(Design.zeros(dH).map(("z", _))) ++ xRwRaw.scale(-pHatS)
-
-        val pass = new MomentPass(dfCe)
-        val gAs = pass.gram(pSDesign, pHatS * (lit(1.0) - pHatS))
-        val gO = pass.gram(tilt.design, tiltW)
-        val gHs = pass.gram(xHs, col("w"))
-        val c1 = pass.cross(xHs, pSDesign, wres1 * logd)
-        val c2 = pass.cross(blkNegS, pSDesign, wres1 * lpd)
-        val c3 = pass.cross(xHs, pSDesign, pHatS * fitS / col("a_centered") * col("w") * lpd)
-        val gHr = pass.gram(xHr, col("w_and_tilt"))
-        val c4 = pass.cross(xHr, pSDesign, wres2 * logd)
-        val c5 = pass.cross(blkNegR, pSDesign, wres2 * lpd)
-        val c6 = pass.cross(xHr, pSDesign,
-          pHatS * fitR2 / col("a_centered") * col("w") * col("tilt_ratios") * lpd)
-        val cO2 = pass.cross(xHr, tilt.design, isE * wres2)
-        val gR = pass.gram(xRr, isI)
-        val cRS = pass.cross(xRr, xSraw, isI)
-        pass.run()
-
-        val h = DenseMatrix.zeros[Double](d, d)
-        h(0 until dAs, 0 until dAs) := pass.matrix(gAs)
-        val sO = dAs
-        h(sO until sO + dO, sO until sO + dO) := pass.matrix(gO)
-        val sHs = sO + dO
-        h(sHs until sHs + dH + dS, sHs until sHs + dH + dS) := pass.matrix(gHs)
-        h(sHs until sHs + dH + dS, 0 until dAs) :=
-          pass.matrix(c1) + pass.matrix(c2) + pass.matrix(c3)
-        val sHr = sHs + dH + dS
-        h(sHr until sHr + dH + dR2, sHr until sHr + dH + dR2) := pass.matrix(gHr)
-        h(sHr until sHr + dH + dR2, 0 until dAs) :=
-          pass.matrix(c4) + pass.matrix(c5) + pass.matrix(c6)
-        h(sHr until sHr + dH + dR2, sO until sO + dO) := -pass.matrix(cO2)
-        val sR = sHr + dH + dR2
-        h(sR until d, sR until d) := pass.matrix(gR)
-        h(sR until d, sHs + dH until sHr) := -pass.matrix(cRS)
-
-        val meat = Sandwich.meat(dfCe, scores, col("__cluster"))
-        val sand = LinAlg.sandwichStep(h, meat, info.nUsers, d)
-
-        // pool 3 blocks: beta_r_wcls (2 blocks of d_r) + beta_r (1 block)
-        val posR = (sHr + dH) until d
-        val v = DenseMatrix.tabulate(dR2 + dR, dR2 + dR)((i, j) => sand(posR(i), posR(j)))
-        val stacked = DenseVector.vertcat(betaRw, betaRv)
-        val (pooled, vp) = Pooling.full(stacked, v, dR, 3)
-        val se = LinAlg.diagSqrt(vp)
-        val err = pooled - betaRTrue
-        EstimateResult(pooled, se, vp, err.t * LinAlg.solveVec(vp, err), err /:/ se,
-          info.n, d, tilt.warning)
-      } finally df.unpersist()
-    } finally dfP.unpersist()
+      EstimateResult(bigGamma * s.betaA, breeze.numerics.sqrt(diag(vBetaR)), vBetaR,
+        tiltWarning = false)
+    }
   }
 }

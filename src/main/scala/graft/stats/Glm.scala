@@ -15,10 +15,7 @@ import org.apache.spark.sql.functions._
   */
 object Glm {
 
-  final case class LogisticFit(coef: DenseVector[Double], converged: Boolean, warning: Boolean) {
-    /** Fitted-probability column 1/(1+exp(-Xβ)) for downstream exprs. */
-    def predict(x: Design): Column = lit(1.0) / (lit(1.0) + exp(-x.dot(coef.toArray.toSeq)))
-  }
+  final case class LogisticFit(coef: DenseVector[Double], converged: Boolean, warning: Boolean)
 
   /** Weighted least squares via one fused Gramian pass over [X|y]:
     * G = Σ w·[x,y][x,y]ᵀ gives XᵀWX (p×p block) and XᵀWy (last column).
@@ -28,7 +25,7 @@ object Glm {
     val pass = new MomentPass(df)
     val g = pass.gram(aug, w)
     pass.run()
-    val G = pass.matrix(g)
+    val G = g()
     val p = x.width
     val xtwx = G(0 until p, 0 until p).toDenseMatrix
     val xtwy = DenseVector((0 until p).map(i => G(i, p)).toArray)
@@ -77,18 +74,18 @@ object Glm {
       val aug = x ++ Design(Seq(("__z", z)))
       val pass = new MomentPass(df)
       val g = pass.gram(aug, wCol)
-      val dSlot = pass.scalar(devTerm)
-      val sepSlot = pass.scalar(
+      val dSlot = pass.sum(devTerm)
+      val sepSlot = pass.sum(
         when(mu < lit(sepEps) || mu > lit(1.0) - lit(sepEps), 1.0).otherwise(0.0))
       pass.run()
 
-      val devNow = pass.value(dSlot)
-      sep = pass.value(sepSlot) > 0.0
+      val devNow = dSlot()
+      sep = sepSlot() > 0.0
       if (beta != null && math.abs(devNow - dev) / (math.abs(devNow) + 0.1) < tol) {
         converged = true // current beta accepted; its own μ was just measured
       } else {
         dev = devNow
-        val G = pass.matrix(g)
+        val G = g()
         val xtwx = G(0 until p, 0 until p).toDenseMatrix
         val xtwz = DenseVector((0 until p).map(i => G(i, p)).toArray)
         beta = LinAlg.solveVec(xtwx, xtwz)

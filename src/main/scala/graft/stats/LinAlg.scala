@@ -1,6 +1,6 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky, inv, kron, diag, sum}
+import breeze.linalg.{DenseMatrix, DenseVector, cholesky, inv}
 
 /** Driver-side d×d linear algebra (d ≤ ~40; distributing this would be
   * anti-idiomatic — SURVEY.md §4.2). Mirrors the reference's factorization
@@ -17,7 +17,6 @@ object LinAlg {
     m
   }
 
-  def solve(a: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = a \ b
   def solveVec(a: DenseMatrix[Double], b: DenseVector[Double]): DenseVector[Double] = a \ b
 
   /** chol2inv(chol(x)) — SPD inverse via Cholesky (etwcls.R:169). */
@@ -38,8 +37,4 @@ object LinAlg {
     (half * half.t) * (nUsers.toDouble / (nUsers - d).toDouble)
   }
 
-  def kronecker(a: DenseMatrix[Double], b: DenseMatrix[Double]): DenseMatrix[Double] = kron(a, b)
-
-  def diagSqrt(a: DenseMatrix[Double]): DenseVector[Double] =
-    breeze.numerics.sqrt(diag(a))
 }

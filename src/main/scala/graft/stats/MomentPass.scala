@@ -2,64 +2,50 @@ package graft.stats
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 
 import scala.collection.mutable.ArrayBuffer
 
 /** Batches arbitrarily many Gramian / cross-moment / vector-sum
   * aggregates into ONE distributed scan (SURVEY.md §3.2: "all Gramian
-  * blocks ... in a single aggregation over a single wide row"). Each
-  * estimator phase is one MomentPass.run() = one Spark job.
+  * blocks ... in a single aggregation over a single wide row"): the
+  * DataFrame backend's [[Reductions]]. Each estimator phase is one
+  * MomentPass.run() = one Spark job; a requested value is read after it.
   */
-final class MomentPass(df: DataFrame) {
+final class MomentPass(df: DataFrame) extends Reductions[Column, Design] {
   private val exprs = ArrayBuffer[Column]()
-  private val shapes = ArrayBuffer[(Int, Int)]()
-  private val isScalar = ArrayBuffer[Boolean]()
-
-  private def slot(c: Column, p: Int, q: Int, scalarSlot: Boolean = false): Int = {
-    exprs += c
-    shapes += ((p, q))
-    isScalar += scalarSlot
-    exprs.size - 1
-  }
-
-  /** Σ w · x xᵀ over rows (p×p). */
-  def gram(x: Design, w: Column): Int =
-    slot(Aggregates.gram(x.arr, w.cast("double")), x.width, x.width)
-
-  /** Σ w · u vᵀ over rows (p×q). */
-  def cross(u: Design, v: Design, w: Column): Int =
-    slot(Aggregates.cross(u.arr, v.arr, w.cast("double")), u.width, v.width)
-
-  /** Σ w · x over rows (length p). */
-  def vsum(x: Design, w: Column): Int =
-    slot(Aggregates.vsum(x.arr, w.cast("double")), x.width, 1)
-
-  /** Σ e (scalar). */
-  def scalar(e: Column): Int =
-    slot(org.apache.spark.sql.functions.sum(e.cast("double")), 1, 1, scalarSlot = true)
-
   private var results: Row = _
 
-  def run(): this.type = {
-    results = df.select(exprs.toSeq: _*).head()
-    this
+  private def slot[A](agg: Column)(read: Int => A): () => A = {
+    exprs += agg
+    val i = exprs.size - 1
+    () => {
+      if (results.isNullAt(i))
+        throw new IllegalArgumentException(
+          "MomentPass over an empty DataFrame — no rows to aggregate")
+      read(i)
+    }
   }
 
   private def flat(i: Int): Seq[Double] = {
-    if (results.isNullAt(i))
-      throw new IllegalArgumentException(
-        "MomentPass over an empty DataFrame — no rows to aggregate")
-    val s = if (isScalar(i)) Seq(results.getDouble(i)) else results.getSeq[Double](i)
+    val s = results.getSeq[Double](i)
     if (s.isEmpty)
       throw new IllegalArgumentException(
         "MomentPass over an empty DataFrame — no rows to aggregate")
     s
   }
 
-  def matrix(i: Int): DenseMatrix[Double] = {
-    val (p, q) = shapes(i)
-    LinAlg.fromFlat(flat(i), p, q)
-  }
-  def vector(i: Int): DenseVector[Double] = DenseVector(flat(i).toArray)
-  def value(i: Int): Double = flat(i).head
+  def gram(x: Design, w: Column): () => DenseMatrix[Double] =
+    slot(Aggregates.gram(x.arr, w.cast("double")))(i => LinAlg.fromFlat(flat(i), x.width, x.width))
+
+  def tdot(x: Design, z: Design): () => DenseMatrix[Double] =
+    slot(Aggregates.cross(x.arr, z.arr, lit(1.0)))(i => LinAlg.fromFlat(flat(i), x.width, z.width))
+
+  def tvec(x: Design, v: Column): () => DenseVector[Double] =
+    slot(Aggregates.vsum(x.arr, v.cast("double")))(i => DenseVector(flat(i).toArray))
+
+  def sum(e: Column): () => Double =
+    slot(org.apache.spark.sql.functions.sum(e.cast("double")))(i => results.getDouble(i))
+
+  def run(): Unit = results = df.select(exprs.toSeq: _*).head()
 }

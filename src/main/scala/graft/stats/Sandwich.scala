@@ -5,7 +5,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Cluster-robust sandwich meat: per-cluster score sums → Gramian
-  * (helpers.R:7-22, V3). Two distributed aggregations: a hash-shuffle
+  * (helpers.R:7-22, V3), the estimators' DataFrame backend's meat (the
+  * array backend, LocalBattery, sums the same blocks of consecutive rows
+  * in the task). Two distributed aggregations: a hash-shuffle
   * groupBy(cluster) with map-side partial vector sums, then a tiny
   * Gramian over one row per cluster.
   *
@@ -17,18 +19,11 @@ import org.apache.spark.sql.functions._
   * point. The committed golden SEs (example_estimates.csv) depend on this
   * grouping — verified numerically (tools/golden_oracle.py): block
   * clustering reproduces 1.259/1.379 for WCLS-Internal, true per-user
-  * clustering gives 1.233/1.385. `blockClusterCol` reproduces the golden
-  * semantics; pass `df("user_id")` for true per-user clustering.
+  * clustering gives 1.233/1.385. The estimators cluster by
+  * FrameMoments.withBlockCluster, which reproduces the golden semantics;
+  * pass `df("user_id")` for true per-user clustering.
   */
 object Sandwich {
-
-  /** Cluster key matching the reference's balanced reshape: row position
-    * (R order: user-fastest within t) divided into blocks of t_max.
-    * Requires an explicit row-position column (`_rowpos`, 1-based within
-    * the data actually passed to the estimator).
-    */
-  def blockClusterCol(rowPos: Column, tMax: Int): Column =
-    floor((rowPos - 1) / tMax)
 
   /** meat = Σ_c (Σ_rows∈c s)(Σ_rows∈c s)ᵀ over score vector column. */
   def meat(df: DataFrame, scores: Design, cluster: Column): DenseMatrix[Double] = {

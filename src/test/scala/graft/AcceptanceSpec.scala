@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.harness.{AcceptanceChecks, GridRunner, SimulationRunner}
+import graft.stats.Battery
 
 /** BASELINE.md target 2 — the statistical acceptance gate. The committed
   * `results/acceptance` per-rep results (5 cells — 3 symmetric + 2
@@ -50,15 +51,15 @@ class AcceptanceSpec extends AnyFunSuite with SparkTestSession {
 
   test("committed per-rep results are reproducible from the engine (spot check)") {
     requireArtifacts()
-    // Re-run ONE small slice live — cell 25/25, first 5 reps, 2 methods —
+    // Re-run ONE small slice live — cell 25/25, first 5 reps, all methods —
     // and require bit-equality with the committed rows: pins that the
     // committed artifact is what THIS engine produces, not a stale dump.
     val cell = SimulationRunner.Cell(25, 25)
     val live = SimulationRunner.perRepResults(
-      spark, Seq(cell), nReps = 5, methods = Seq("WCLS-Internal", "PET-WCLS"),
+      spark, Seq(cell), nReps = 5, methods = Battery.methodNames,
       baseSeed = GridRunner.cellSeed(2024L, cell))
     val committed = spark.read.parquet(s"$dir/cell_25_25")
-      .filter(col("replication") <= 5 && col("method").isin("WCLS-Internal", "PET-WCLS"))
+      .filter(col("replication") <= 5)
     val cols = live.columns.sorted.map(col(_))
     val diff = live.select(cols: _*).exceptAll(committed.select(cols: _*)).count() +
       committed.select(cols: _*).exceptAll(live.select(cols: _*)).count()

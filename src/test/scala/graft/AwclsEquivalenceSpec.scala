@@ -1,18 +1,22 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.stats.{Battery, Estimators, LocalBattery}
 
-/** The distributed A-WCLS must agree with the executor-local one
-  * (same math, two execution paths — the same cross-check the golden
-  * specs give the other nine methods, which A-WCLS lacks upstream).
+import graft.gen.PanelGenerator
+import graft.stats.{Battery, LocalBattery}
+
+/** A-WCLS on the DataFrame backend must agree with the array backend
+  * (the same estimator code over two backends — the cross-check
+  * ScaleRoutingSpec gives the battery's ten methods, which A-WCLS is
+  * not one of).
   */
 class AwclsEquivalenceSpec extends AnyFunSuite with SparkTestSession {
 
-  test("distributed A-WCLS == executor-local A-WCLS on the golden panel") {
-    val df = Battery.examplePanel(spark).cache()
-    val dist = Estimators.awcls(df)
-    val local = LocalBattery.run("A-WCLS", LocalBattery.fromDataFrame(df, "_rowidx"))
+  test("A-WCLS agrees on the DataFrame and array backends on a generated panel") {
+    val df = PanelGenerator.panel(spark, 2024L,
+      PanelGenerator.Config(nInternal = 400, nExternal = 400)).cache()
+    val dist = Battery.run("A-WCLS", df)
+    val local = LocalBattery.run("A-WCLS", LocalBattery.fromDataFrame(df, "t", "user_id"))
     for (i <- 0 until 4) {
       assert(math.abs(dist.betaR(i) - local.betaR(i)) < 1e-8,
         s"beta[$i]: ${dist.betaR(i)} vs ${local.betaR(i)}")

@@ -116,6 +116,18 @@ class GeneratorSpec extends AnyFunSuite with SparkTestSession {
     } finally trace.remove()
   }
 
+  test("a 100x100 cell at 2 replications fits one replication in each battery task") {
+    // Murmur3 placement put both replications of this cell in one
+    // partition, leaving the other battery task empty
+    val perRep = SimulationRunner.perRepResults(spark, Seq(SimulationRunner.Cell(100, 100)),
+      nReps = 2, methods = Seq("WCLS-Internal"))
+    val placed = perRep.select(col("replication"), spark_partition_id().as("task"))
+      .distinct().collect().map(r => r.getInt(0) -> r.getInt(1))
+    assert(placed.map(_._1).sorted.toSeq == Seq(1, 2), placed.mkString(", "))
+    assert(placed.map(_._2).distinct.length == 2,
+      s"replications share a battery task: ${placed.mkString(", ")}")
+  }
+
   test("simulation harness smoke: metrics shape + calibration direction") {
     val perRep = SimulationRunner.perRepResults(
       spark, Seq(SimulationRunner.Cell(40, 40)), nReps = 4,

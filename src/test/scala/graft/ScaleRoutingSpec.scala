@@ -16,7 +16,7 @@ class ScaleRoutingSpec extends AnyFunSuite with SparkTestSession {
 
   test("oversized cells route distributed and match the local route") {
     val cell = Seq(SimulationRunner.Cell(30, 30))
-    val methods = Seq("WCLS-Internal", "WCLS-Pooled", "P-WCLS-Pooled", "PET-WCLS")
+    val methods = graft.stats.Battery.methodNames
     // same cell, same seeds: once as a "small" cell (local battery inside
     // executors), once forced through the oversized-cell distributed path
     val local = SimulationRunner.perRepResults(spark, cell, nReps = 2, methods)
