@@ -17,8 +17,8 @@ import graft.stats.{Design, Glm}
   *
   * Scale design: the feature pass is computed ONCE and staged — the
   * R-parity IRLS ([[graft.stats.Glm.logistic]]) then runs each
-  * iteration as one distributed fused-Gramian pass over the staged
-  * features (N+1 scans total for N updates), coefficients are stored
+  * iteration as one distributed moment pass over the staged features
+  * (N+1 scans total for N updates), coefficients are stored
   * via the IndexStore discipline (train once, score many — the
   * production lifecycle: the model that scored yesterday's corpus is
   * the model that scores today's increment) and return to the plan as

@@ -1,7 +1,6 @@
 package graft.stats
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 
 /** R `splines::bs(x, df, degree)` replicated for Catalyst (SURVEY.md P14).
   *
@@ -11,9 +10,9 @@ import org.apache.spark.sql.functions._
   *  - full Cox-de Boor basis of the given degree, first column dropped
   *    (bs() default intercept=FALSE).
   *
-  * Knots are computed in one distributed pass (`percentile` is Spark's
-  * exact interpolating percentile = R type 7; min/max in the same agg),
-  * then baked into the per-row basis evaluation as literals.
+  * The knots are fitted once for both backends by [[Moments.bsplines]]
+  * (on a DataFrame, one pass for every spline of a design); this class
+  * evaluates the basis, per value or as a Catalyst expression.
   */
 final case class BSpline(knots: Array[Double], degree: Int, nBasis: Int) {
 
@@ -64,20 +63,5 @@ final case class BSpline(knots: Array[Double], degree: Int, nBasis: Int) {
       graft.functions.BSplineBasisExpr(
         org.apache.spark.sql.graft.Bridge.toExpression(x.cast("double")), this))
     Design((0 until nBasis).map(j => (s"$prefix$j", arrCol.getItem(j))))
-  }
-}
-
-object BSpline {
-  /** Fit knots from data in one pass; mirrors bs(x, df=, degree=). */
-  def fit(df: DataFrame, x: Column, dfParam: Int, degree: Int): BSpline = {
-    val nInterior = dfParam - degree
-    val probs = (1 to nInterior).map(i => i.toDouble / (nInterior + 1))
-    val aggs = Seq(min(x).cast("double"), max(x).cast("double")) ++
-      probs.map(p => percentile(x, lit(p)).cast("double"))
-    val row = df.select(aggs: _*).head()
-    val lo = row.getDouble(0); val hi = row.getDouble(1)
-    val interior = (0 until nInterior).map(i => row.getDouble(2 + i))
-    val knots = Array.fill(degree + 1)(lo) ++ interior ++ Array.fill(degree + 1)(hi)
-    BSpline(knots, degree, dfParam)
   }
 }

@@ -58,8 +58,7 @@ object Estimators {
     * bases of x1 and x2 and, with `interact`, their pairwise products. */
   def splineDesign(b: Moments)(dfP: Int, degree: Int, interact: Boolean): b.X = {
     import b._
-    val b1 = bspline(x1, dfP, degree)
-    val b2 = bspline(x2, dfP, degree)
+    val Seq(b1, b2) = bsplines(Seq(x1, x2), dfP, degree)
     val main = Seq(cbind(one), b1, b2)
     if (!interact) hcat(main: _*)
     else hcat(main :+ cbind((for (k <- 0 until width(b2); j <- 0 until width(b1))
@@ -183,8 +182,7 @@ object Estimators {
       * from it (wcls.R:122-135, P1-P3); `extra` values are kept with them. */
     private def propensity(pHAUse: V, extra: V*): (Prop, Seq[V]) = {
       val x = cbind(one)
-      val (alpha, _) = logistic(x, a)
-      val pHat = sigmoid(mv(x, alpha))
+      val pHat = sigmoid(mv(x, logistic(x, a).coef))
       val pHatA = a * pHat + (1.0 - a) * (1.0 - pHat)
       val k = keep(Seq(pHat, a - pHat, pHatA, pHatA / pHAUse) ++ extra, cache = true)
       (new Prop(k(0), k(1), k(2), k(3)), k.drop(4))
@@ -232,8 +230,8 @@ object Estimators {
       var out: (X, DenseVector[Double], Boolean) = null
       for ((dfP, deg) <- Seq((3, 2), (2, 2), (1, 1)) if out == null) {
         val x = splineDesign(b)(dfP, deg, interact = true)
-        val (omega, warn) = logistic(x, isI)
-        if (!warn || dfP == 1) out = (x, omega, width(x) <= 10)
+        val f = logistic(x, isI)
+        if (!f.warning || dfP == 1) out = (x, f.coef, width(x) <= 10)
       }
       val (xo, omegaRaw, warning) = out
       val omega = omegaRaw.copy
@@ -283,8 +281,7 @@ object Estimators {
       val obs =
         if (!observational) Nil
         else {
-          val (alphaH, _) = logistic(xAh, a)
-          val pHHat = sigmoid(mv(xAh, alphaH))
+          val pHHat = sigmoid(mv(xAh, logistic(xAh, a).coef))
           Seq(pHHat, a * pHHat + (1.0 - a) * (1.0 - pHHat))
         }
       val (pr, kept) = propensity(if (observational) obs(1) else pHA, obs: _*)

@@ -8,9 +8,10 @@ import scala.collection.mutable.ArrayBuffer
 
 /** The DataFrame backend: values are Catalyst columns, designs are
   * [[Design]]s, each batch of [[Reductions]] is one fused [[MomentPass]] (one
-  * Spark job), the fits are [[Glm]]'s and the meat is [[Sandwich]]'s.
-  * Restrictions to internal or external rows are weights by the row's
-  * indicator, so they ride the batch they appear in. */
+  * Spark job) and the meat is [[Sandwich]]'s; the logistic, WLS and knot
+  * fits are [[Moments]]', shared with the array backend. Restrictions to
+  * internal or external rows are weights by the row's indicator, so they
+  * ride the batch they appear in. */
 class FrameMoments(df0: DataFrame) extends Moments with FrameRows {
   import FrameMoments._
 
@@ -33,14 +34,6 @@ class FrameMoments(df0: DataFrame) extends Moments with FrameRows {
     if (cache) { frame = frame.cache(); cached += frame }
     names.map(nc => col(nc._1))
   }
-
-  def logistic(x: Design, y: Column): (DenseVector[Double], Boolean) = {
-    val f = Glm.logistic(frame, x, y)
-    (f.coef, f.warning)
-  }
-  def wls(x: Design, y: Column, w: Column): DenseVector[Double] = Glm.wls(frame, x, y, w)
-  def bspline(x: Column, df: Int, degree: Int): Design =
-    BSpline.fit(frame, x, df, degree).designOf("bs", x)
 
   def batch(): Batch = new MomentPass(frame)
 
@@ -66,7 +59,6 @@ trait FrameRows extends Rows {
   val pHA: Column = col("p_h_a")
   val isI: Column = col("is_internal").cast("double")
   val isE: Column = col("is_external").cast("double")
-  val one: Column = lit(1.0)
   def const(c: Double): Column = lit(c)
 
   def plus(u: Column, v: Column): Column = u + v
@@ -75,6 +67,8 @@ trait FrameRows extends Rows {
   // pow(v, -1) not `/`: R yields Inf on a zero divisor, ANSI division errors
   def div(u: Column, v: Column): Column = u * pow(v, -1.0)
   def exp(u: Column): Column = org.apache.spark.sql.functions.exp(u)
+  def log(u: Column): Column = org.apache.spark.sql.functions.log(u)
+  def clamp(u: Column, lo: Double, hi: Double): Column = least(greatest(u, lit(lo)), lit(hi))
 
   def cbind(vs: Column*): Design = Design(vs.zipWithIndex.map { case (c, i) => (s"c$i", c) })
   def hcat(xs: Design*): Design = xs.reduce(_ ++ _)
@@ -86,6 +80,7 @@ trait FrameRows extends Rows {
   def xminus(x: Design, z: Design): Design =
     Design(x.terms.zip(z.terms).map { case ((n, c), (_, d)) => (n, c - d) })
   def mv(x: Design, beta: DenseVector[Double]): Column = x.dot(beta.toArray.toSeq)
+  def basis(x: Column, spline: BSpline): Design = spline.designOf("bs", x)
 
   def rowsOf(v: Column, internal: Boolean): Column = v * (if (internal) isI else isE)
   def rows(x: Design, internal: Boolean): Design = x.scale(if (internal) isI else isE)

@@ -1,6 +1,6 @@
 package graft.stats
 
-import breeze.linalg.{DenseMatrix, DenseVector, cholesky, inv}
+import breeze.linalg.{DenseMatrix, cholesky, inv}
 
 /** Driver-side d×d linear algebra (d ≤ ~40; distributing this would be
   * anti-idiomatic — SURVEY.md §4.2). Mirrors the reference's factorization
@@ -16,8 +16,6 @@ object LinAlg {
     while (i < p) { var j = 0; while (j < q) { m(i, j) = flat(i * q + j); j += 1 }; i += 1 }
     m
   }
-
-  def solveVec(a: DenseMatrix[Double], b: DenseVector[Double]): DenseVector[Double] = a \ b
 
   /** chol2inv(chol(x)) — SPD inverse via Cholesky (etwcls.R:169). */
   def cholInv(a: DenseMatrix[Double]): DenseMatrix[Double] = {

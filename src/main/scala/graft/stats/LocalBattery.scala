@@ -10,8 +10,10 @@ import breeze.linalg.{DenseMatrix, DenseVector}
   * makes replication the unit of parallelism instead of row-parallelism
   * over tiny data. The methods themselves are [[Estimators]]'; this
   * object holds the panel type and the kernels [[ArrayMoments]] maps the
-  * estimators' reductions onto (Breeze products, the IRLS loop, type-7
-  * spline knots, the blocked meat).
+  * estimators' rows and reductions onto (elementwise loops, Breeze
+  * products, type-7 quantiles, the spline basis, the blocked meat); the
+  * logistic, WLS and knot fits are [[Moments]]', shared with the
+  * DataFrame backend.
   */
 object LocalBattery {
 
@@ -26,6 +28,9 @@ object LocalBattery {
     while (i < a.length) { out(i) = f(a(i)); i += 1 }; out
   }
   private def suma(a: A): Double = { var s = 0.0; var i = 0; while (i < a.length) { s += a(i); i += 1 }; s }
+  // least and greatest values, NaNs skipped
+  private def mina(a: A): Double = { var m = Double.PositiveInfinity; var i = 0; while (i < a.length) { if (a(i) < m) m = a(i); i += 1 }; m }
+  private def maxa(a: A): Double = { var m = Double.NegativeInfinity; var i = 0; while (i < a.length) { if (a(i) > m) m = a(i); i += 1 }; m }
 
   final case class Panel(
       y: A, a: A, x1: A, x2: A, x3: A, pH: A, pHA: A,
@@ -39,8 +44,10 @@ object LocalBattery {
   }
 
   /** The panel as the estimators' [[Moments]]: values are row arrays,
-    * designs n×p matrices, and every reduction is computed where it is
-    * requested, so a batch's `run` has nothing left to do. */
+    * designs n×p matrices, and every reduction is computed when it is
+    * first read, so a batch's `run` has nothing left to do and a value
+    * nobody reads is never computed. Each constant operand is one n-row
+    * array, made once per panel. */
   final class ArrayMoments(p: Panel) extends Moments {
     type V = A
     type X = DenseMatrix[Double]
@@ -63,14 +70,16 @@ object LocalBattery {
     def pHA: A = p.pHA
     def isI: A = p.isI
     def isE: A = p.isE
-    lazy val one: A = const(1.0)
-    def const(c: Double): A = Array.fill(p.n)(c)
+    private val consts = scala.collection.mutable.HashMap.empty[Double, A]
+    def const(c: Double): A = consts.getOrElseUpdate(c, Array.fill(p.n)(c))
 
     def plus(u: A, v: A): A = map2(u, v)(_ + _)
     def minus(u: A, v: A): A = map2(u, v)(_ - _)
     def times(u: A, v: A): A = map2(u, v)(_ * _)
     def div(u: A, v: A): A = map2(u, v)(_ / _)
     def exp(u: A): A = mapa(u)(math.exp)
+    def log(u: A): A = mapa(u)(math.log)
+    def clamp(u: A, lo: Double, hi: Double): A = mapa(u)(v => math.min(math.max(v, lo), hi))
 
     def cbind(cols: A*): X = {
       val n = cols.head.length
@@ -90,6 +99,16 @@ object LocalBattery {
     }
     def xminus(x: X, z: X): X = x - z
     def mv(x: X, beta: DenseVector[Double]): A = (x * beta).toArray
+    def basis(xs: A, spline: BSpline): X = {
+      val m = DenseMatrix.zeros[Double](xs.length, spline.nBasis)
+      var i = 0
+      while (i < xs.length) {
+        val b = spline.basis(xs(i)); var j = 0
+        while (j < spline.nBasis) { m(i, j) = b(j); j += 1 }
+        i += 1
+      }
+      m
+    }
 
     private def idx(internal: Boolean) = if (internal) p.intIdx else p.extIdx
     def rowsOf(v: A, internal: Boolean): A = idx(internal).map(v)
@@ -107,77 +126,25 @@ object LocalBattery {
 
     def keep(vs: Seq[A], cache: Boolean): Seq[A] = vs
 
-    def wls(x: X, y: A, w: A): DenseVector[Double] = {
-      val xtw = rscale(x, w).t
-      (xtw * x) \ (xtw * DenseVector(y))
-    }
-
-    /** R glm.fit binomial IRLS (deviance convergence + separation warning). */
-    def logistic(x: X, y: A): (DenseVector[Double], Boolean) = {
-      val maxIter = 25; val tol = 1e-8
-      val n = y.length
-      var mu = mapa(y)(v => (v + 0.5) / 2.0)
-      var eta = mapa(mu)(m => math.log(m / (1.0 - m)))
-      def dev(m: A): Double = {
-        var s = 0.0; var i = 0
-        while (i < n) {
-          val mc = math.min(math.max(m(i), 1e-300), 1.0 - 1e-16)
-          s += -2.0 * (y(i) * math.log(mc) + (1.0 - y(i)) * math.log(1.0 - mc)); i += 1
-        }
-        s
-      }
-      var d = dev(mu)
-      var beta: DenseVector[Double] = null
-      var converged = false
-      var it = 0
-      while (it < maxIter && !converged) {
-        val p = mapa(eta)(e => 1.0 / (1.0 + math.exp(-e)))
-        val w = mapa(p)(v => v * (1.0 - v))
-        val z = Array.tabulate(n)(i => eta(i) + (y(i) - p(i)) / w(i))
-        beta = wls(x, z, w)
-        eta = mv(x, beta)
-        mu = mapa(eta)(e => 1.0 / (1.0 + math.exp(-e)))
-        val dNew = dev(mu)
-        if (math.abs(dNew - d) / (math.abs(dNew) + 0.1) < tol) converged = true
-        d = dNew
-        it += 1
-      }
-      val eps = 10.0 * 2.220446049250313e-16
-      var sep = false; var i = 0
-      while (i < n) { if (mu(i) < eps || mu(i) > 1.0 - eps) sep = true; i += 1 }
-      (beta, sep || !converged)
-    }
-
-    /** bs() with type-7 quantile interior knots. */
-    def bspline(xs: A, dfP: Int, degree: Int): X = {
-      def quantile7(p: Double): Double = {
-        val s = xs.sorted
-        val h = (s.length - 1) * p
-        val fl = math.floor(h).toInt
-        s(fl) + (h - fl) * (s(math.min(fl + 1, s.length - 1)) - s(fl))
-      }
-      val nInterior = dfP - degree
-      val interior = (1 to nInterior).map(i => quantile7(i.toDouble / (nInterior + 1)))
-      val knots = Array.fill(degree + 1)(xs.min) ++ interior ++ Array.fill(degree + 1)(xs.max)
-      val spline = BSpline(knots, degree, dfP)
-      val m = DenseMatrix.zeros[Double](xs.length, dfP)
-      var i = 0
-      while (i < xs.length) {
-        val b = spline.basis(xs(i)); var j = 0
-        while (j < dfP) { m(i, j) = b(j); j += 1 }
-        i += 1
-      }
-      m
-    }
-
     def batch(): Batch = new Batch {
-      def sum(v: A): () => Double = { val s = suma(v); () => s }
-      def gram(x: X, w: A): () => DenseMatrix[Double] = {
-        val g = rscale(x, w).t * x; () => g
+      private def later[T](f: => T): () => T = { lazy val v = f; () => v }
+      def sum(v: A): () => Double = later(suma(v))
+      def min(v: A): () => Double = later(mina(v))
+      def max(v: A): () => Double = later(maxa(v))
+      def quantile(v: A, ps: Seq[Double]): () => Seq[Double] = later {
+        val s = v.clone(); java.util.Arrays.sort(s)
+        ps.map { q =>
+          val h = (s.length - 1) * q
+          val fl = math.floor(h).toInt
+          s(fl) + (h - fl) * (s(math.min(fl + 1, s.length - 1)) - s(fl))
+        }
       }
-      def tdot(x: X, z: X): () => DenseMatrix[Double] = { val g = x.t * z; () => g }
-      def tvec(x: X, v: A): () => DenseVector[Double] = {
-        val g = x.t * DenseVector(v); () => g
+      def gram(x: X, w: A): () => DenseMatrix[Double] = later(rscale(x, w).t * x)
+      def tdot(x: X, z: X): () => DenseMatrix[Double] = later(x.t * z)
+      def tvec(x: X, v: A): () => DenseVector[Double] = later(x.t * DenseVector(v))
+      def normal(x: X, y: A, w: A): () => (DenseMatrix[Double], DenseVector[Double]) = later {
+        val xtw = rscale(x, w).t
+        (xtw * x, xtw * DenseVector(y))
       }
       def run(): Unit = ()
     }
@@ -215,15 +182,6 @@ object LocalBattery {
   def aicLadder(p: Panel): Seq[(String, Int, Double)] = {
     val b = new ArrayMoments(p)
     import b._
-    def dev(x: X): Double = {
-      val mu = sigmoid(mv(x, logistic(x, isI)._1))
-      var s = 0.0; var i = 0
-      while (i < p.n) {
-        val mc = math.min(math.max(mu(i), 1e-300), 1.0 - 1e-16)
-        s += -2.0 * (p.isI(i) * math.log(mc) + (1.0 - p.isI(i)) * math.log(1.0 - mc)); i += 1
-      }
-      s
-    }
     val candidates = Seq(
       ("intercept", cbind(one)),
       ("x1", cbind(one, x1)),
@@ -234,7 +192,7 @@ object LocalBattery {
       ("bs3+bs3", Estimators.splineDesign(b)(3, 2, interact = false)),
       ("bs3*bs3", Estimators.splineDesign(b)(3, 2, interact = true)),
       ("bs4*bs4", Estimators.splineDesign(b)(4, 2, interact = true)))
-    candidates.map { case (name, x) => (name, x.cols, dev(x) + 2.0 * x.cols) }
+    candidates.map { case (name, x) => (name, x.cols, logistic(x, isI).deviance + 2.0 * x.cols) }
   }
 
   val methodNames: Seq[String] = Battery.methodNames

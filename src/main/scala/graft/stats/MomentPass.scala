@@ -2,7 +2,8 @@ package graft.stats
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.functions
+import org.apache.spark.sql.functions.{array, lit}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -44,8 +45,21 @@ final class MomentPass(df: DataFrame) extends Reductions[Column, Design] {
   def tvec(x: Design, v: Column): () => DenseVector[Double] =
     slot(Aggregates.vsum(x.arr, v.cast("double")))(i => DenseVector(flat(i).toArray))
 
-  def sum(e: Column): () => Double =
-    slot(org.apache.spark.sql.functions.sum(e.cast("double")))(i => results.getDouble(i))
+  /** XᵀWX and XᵀWy from one Gramian of [X|y] under the weight. */
+  def normal(x: Design, y: Column, w: Column): () => (DenseMatrix[Double], DenseVector[Double]) = {
+    val p = x.width
+    val g = gram(x ++ Design(Seq(("__y", y))), w)
+    () => { val m = g(); (m(0 until p, 0 until p).copy, m(0 until p, p).copy) }
+  }
+
+  private def scalar(agg: Column): () => Double = slot(agg)(i => results.getDouble(i))
+  def sum(e: Column): () => Double = scalar(functions.sum(e.cast("double")))
+  def min(e: Column): () => Double = scalar(functions.min(e.cast("double")))
+  def max(e: Column): () => Double = scalar(functions.max(e.cast("double")))
+
+  /** Spark's exact `percentile` interpolates as R's type 7. */
+  def quantile(e: Column, ps: Seq[Double]): () => Seq[Double] =
+    slot(functions.percentile(e.cast("double"), array(ps.map(lit): _*)))(i => results.getSeq[Double](i))
 
   def run(): Unit = results = df.select(exprs.toSeq: _*).head()
 }

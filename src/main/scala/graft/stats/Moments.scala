@@ -2,17 +2,29 @@ package graft.stats
 
 import breeze.linalg.{DenseMatrix, DenseVector}
 
+/** A logistic fit: its coefficients, whether the deviance converged, R's
+  * warning (not converged, or a fitted probability within 10·eps of 0 or
+  * 1) and the deviance at the coefficients. */
+final case class LogisticFit(coef: DenseVector[Double], converged: Boolean, warning: Boolean,
+    deviance: Double)
+
 /** One batch of reductions over a panel's rows: requested first, read
   * after `run()`. The DataFrame backend's batch ([[MomentPass]]) is one
   * Spark job. */
 trait Reductions[V, X] {
   def sum(v: V): () => Double
+  def min(v: V): () => Double
+  def max(v: V): () => Double
+  /** R's default (type 7) quantiles of v at the non-empty `ps`. */
+  def quantile(v: V, ps: Seq[Double]): () => Seq[Double]
   /** Σ w·x xᵀ */
   def gram(x: X, w: V): () => DenseMatrix[Double]
   /** Σ x zᵀ */
   def tdot(x: X, z: X): () => DenseMatrix[Double]
   /** Σ x·v */
   def tvec(x: X, v: V): () => DenseVector[Double]
+  /** The normal equations of y on x under weight w: (XᵀWX, XᵀWy). */
+  def normal(x: X, y: V, w: V): () => (DenseMatrix[Double], DenseVector[Double])
   def run(): Unit
 }
 
@@ -36,8 +48,8 @@ trait Rows {
   def pHA: V
   def isI: V
   def isE: V
-  def one: V
   def const(c: Double): V
+  def one: V = const(1.0)
 
   // row-wise algebra
   def plus(u: V, v: V): V
@@ -45,6 +57,9 @@ trait Rows {
   def times(u: V, v: V): V
   def div(u: V, v: V): V
   def exp(u: V): V
+  def log(u: V): V
+  /** u limited to [lo, hi]. */
+  def clamp(u: V, lo: Double, hi: Double): V
 
   // designs
   def cbind(vs: V*): X
@@ -58,6 +73,8 @@ trait Rows {
   def xminus(x: X, z: X): X
   /** The linear predictor x·β. */
   def mv(x: X, beta: DenseVector[Double]): V
+  /** The spline's basis at each row's x. */
+  def basis(x: V, spline: BSpline): X
 
   // the internal (or external) rows of the panel: the array backend
   // subsets them, the DataFrame backend weights by the row's indicator
@@ -86,8 +103,9 @@ trait Rows {
   }
 }
 
-/** A panel the estimators fit on: the [[Rows]] vocabulary plus the fits,
-  * the batched moment reductions and the clustered meat. */
+/** A panel the estimators fit on: the [[Rows]] vocabulary plus batched
+  * reductions and the clustered meat, from which the logistic, WLS and
+  * B-spline fits are built here once for both backends. */
 trait Moments extends Rows {
   /** Rows, users (clusters), rows per user, max user id, internal share. */
   def n: Long
@@ -103,12 +121,6 @@ trait Moments extends Rows {
     * with them in memory. Identity on the array backend. */
   def keep(vs: Seq[V], cache: Boolean = false): Seq[V]
 
-  /** R glm.fit binomial IRLS: (coefficients, warning). */
-  def logistic(x: X, y: V): (DenseVector[Double], Boolean)
-  def wls(x: X, y: V, w: V): DenseVector[Double]
-  /** R `splines::bs(x, df, degree)` with knots fitted on this panel. */
-  def bspline(x: V, df: Int, degree: Int): X
-
   type Batch = Reductions[V, X]
   def batch(): Batch
 
@@ -118,4 +130,83 @@ trait Moments extends Rows {
 
   /** Releases what `keep` cached. */
   def close(): Unit
+
+  /** Weighted least squares: (XᵀWX)⁻¹ XᵀWy in one batch. */
+  def wls(x: X, y: V, w: V): DenseVector[Double] = {
+    val m = batch()
+    val beta = wlsIn(m, x, y, w)
+    m.run()
+    beta()
+  }
+
+  /** Requests the normal equations in `m`; the solve reads them after its run. */
+  private def wlsIn(m: Batch, x: X, y: V, w: V): () => DenseVector[Double] = {
+    val ne = m.normal(x, y, w)
+    () => { val (xtwx, xtwy) = ne(); xtwx \ xtwy }
+  }
+
+  /** R glm.fit's binomial IRLS (tools/golden_oracle.py `glm_logistic`):
+    *  - start from mustart = (y+0.5)/2, η₀ = logit(μ₀),
+    *  - each update: β = (XᵀWX)⁻¹ XᵀWz, W = μ(1−μ) (at least 1e-300),
+    *    z = η + (y−μ)/W,
+    *  - deviance with μ clamped to [1e-300, 1−1e-16]; converged when
+    *    |dev−dev_old|/(|dev|+0.1) < 1e-8 after at most 25 updates,
+    *  - warning when not converged or a fitted μ is within 10·eps of 0 or
+    *    1 (R's "fitted probabilities numerically 0 or 1", which drives the
+    *    tilt model's spline-df fallback ladder, etwcls.R:112-130).
+    *
+    * Each step is one batch: the deviance and range of the current μ
+    * together with the moments of the next update, so a fit that takes N
+    * updates runs N+1 batches.
+    */
+  def logistic(x: X, y: V): LogisticFit = {
+    val maxIter = 25
+    val tol = 1e-8
+    val sepEps = 10.0 * 2.220446049250313e-16 // 10 * .Machine$double.eps
+    var mu = (y + 0.5) / 2.0
+    var eta = log(mu / (1.0 - mu))
+    var beta: DenseVector[Double] = null
+    var dev = Double.NaN
+    var updates = 0
+    var fit: LogisticFit = null
+    while (fit == null) {
+      val m = batch()
+      val mc = clamp(mu, 1e-300, 1.0 - 1e-16)
+      val devNow = m.sum((y * log(mc) + (1.0 - y) * log(1.0 - mc)) * -2.0)
+      val (lo, hi) = (m.min(mu), m.max(mu))
+      // the working μ: sigmoid(η₀) on the first step, later the μ above
+      val p = if (beta == null) sigmoid(eta) else mu
+      val w = clamp(p * (1.0 - p), 1e-300, Double.PositiveInfinity)
+      val next = wlsIn(m, x, eta + (y - p) / w, w)
+      m.run()
+      val converged = beta != null && math.abs(devNow() - dev) / (math.abs(devNow()) + 0.1) < tol
+      if (converged || updates == maxIter)
+        fit = LogisticFit(beta, converged, !converged || lo() < sepEps || hi() > 1.0 - sepEps,
+          devNow())
+      else {
+        dev = devNow()
+        beta = next()
+        eta = mv(x, beta)
+        mu = sigmoid(eta)
+        updates += 1
+      }
+    }
+    fit
+  }
+
+  /** R `splines::bs(x, df, degree)` of each of `xs`: interior knots at
+    * type-7 quantiles, boundary knots at the min and max repeated
+    * degree+1 times, all fitted on this panel in one batch. */
+  def bsplines(xs: Seq[V], df: Int, degree: Int): Seq[X] = {
+    val nInterior = df - degree
+    val probs = (1 to nInterior).map(i => i.toDouble / (nInterior + 1))
+    val m = batch()
+    val fits = xs.map(v => (m.min(v), m.max(v),
+      if (probs.isEmpty) () => Nil else m.quantile(v, probs)))
+    m.run()
+    xs.zip(fits).map { case (v, (lo, hi, interior)) =>
+      val knots = Array.fill(degree + 1)(lo()) ++ interior() ++ Array.fill(degree + 1)(hi())
+      basis(v, BSpline(knots, degree, df))
+    }
+  }
 }

@@ -16,8 +16,8 @@ class EstimatorJobBudgetSpec extends AnyFunSuite with SparkTestSession {
   private val budget = Map(
     "WCLS-Internal" -> 19, "WCLS-Pooled" -> 19,
     "P-WCLS-Internal" -> 21, "P-WCLS-Pooled" -> 21, "P-WCLS-Pooled-Obs" -> 31,
-    "ET-WCLS-Equal" -> 34, "ET-WCLS-Kron" -> 34, "ET-WCLS" -> 34,
-    "DR-WCLS" -> 36, "PET-WCLS" -> 38)
+    "ET-WCLS-Equal" -> 32, "ET-WCLS-Kron" -> 32, "ET-WCLS" -> 32,
+    "DR-WCLS" -> 34, "PET-WCLS" -> 36)
 
   test("each DataFrame-backend fit runs within its Spark job budget") {
     val panel = PanelGenerator.panel(spark, 2024L,

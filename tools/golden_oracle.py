@@ -1,7 +1,13 @@
+# Numpy re-derivation of the ten estimators on a panel CSV laid out as the
+# reference's example_dat.csv: row index first, users fastest within t,
+# and columns is_internal, x1, x2, x3, p_h, p_h_a, a, y and user_id.
+#     python3 tools/golden_oracle.py [panel.csv]
+# Without an argument it reads the reference panel (Battery.examplePath).
+import sys
 import numpy as np, pandas as pd
 np.set_printoptions(suppress=True)
 
-d = pd.read_csv('/root/reference/example_dat.csv')
+d = pd.read_csv(sys.argv[1] if len(sys.argv) > 1 else '/root/reference/example_dat.csv')
 d = d.rename(columns={d.columns[0]:'rowidx'})
 
 def glm_logistic(X, y, max_iter=25, tol=1e-8):
