@@ -55,7 +55,27 @@ object Bridge {
     * eager localCheckpoint replaces the file-scan lineage with an
     * ExistingRDD leaf), so the only faithful "what did this query
     * actually read" record is the union of FileSourceScan roots across
-    * EVERY QueryExecution the construction + action fired.
+    * EVERY QueryExecution the construction + action fired
+    * ([[executedPlans]]). A failing execution leaves no plan, which is
+    * safe because callers must assert a POSITIVE root too (e.g. the
+    * release dir), so an under-captured trace can never pass as "scanned
+    * nothing forbidden". */
+  def scannedFileRoots(s: org.apache.spark.sql.SparkSession)(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    val paths = scala.collection.mutable.Set.empty[String]
+    def record(p: SparkPlan): Unit = p.foreachWithSubqueries {
+      case f: FileSourceScanExec =>
+        f.relation.location.rootPaths.foreach(r => paths += r.toString)
+      case a: AdaptiveSparkPlanExec => record(a.executedPlan)
+      case _ => ()
+    }
+    executedPlans(s)(body).foreach(record)
+    paths.toSeq.sorted
+  }
+
+  /** The executed plan of every query execution triggered while `body`
+    * runs ON THE CALLING THREAD, in the order they ended.
     *
     * Capture mechanics (r18, the r17 advice fix): `body` runs under a
     * unique JOB TAG (a thread-local property inherited by every SQL
@@ -67,23 +87,14 @@ object Bridge {
     * (b) there is no executionId→QueryExecution map-lookup race — the
     * End event object holds the QueryExecution itself. A failing
     * execution's `executedPlan` may itself throw (analysis-stage
-    * failures); that record is try-wrapped, which is safe because
-    * callers must assert a POSITIVE root too (e.g. the release dir), so
-    * an under-captured trace can never pass as "scanned nothing
-    * forbidden". The listener bus is async; this drains it
-    * (private[spark] waitUntilEmpty — the reason this helper lives in
-    * the sql package) before reporting. */
-  def scannedFileRoots(s: org.apache.spark.sql.SparkSession)(body: => Unit): Seq[String] = {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    * failures); such an execution is skipped. The listener bus is async;
+    * this drains it (private[spark] waitUntilEmpty — the reason this
+    * helper lives in the sql package) before reporting. */
+  def executedPlans(s: org.apache.spark.sql.SparkSession)(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
-    val paths = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    def record(p: SparkPlan): Unit = p.foreachWithSubqueries {
-      case f: FileSourceScanExec =>
-        f.relation.location.rootPaths.foreach(r => paths.add(r.toString))
-      case a: AdaptiveSparkPlanExec => record(a.executedPlan)
-      case _ => ()
-    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val traceTag = s"graft-scan-trace-${java.util.UUID.randomUUID()}"
     val tagged = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -92,9 +103,7 @@ object Bridge {
           case st: SparkListenerSQLExecutionStart if st.jobTags.contains(traceTag) =>
             tagged.add(st.executionId)
           case en: SparkListenerSQLExecutionEnd if tagged.contains(en.executionId) =>
-            // executedPlan can throw for an execution that failed before
-            // planning completed — record what exists, nothing more
-            try Option(en.qe).foreach(qe => record(qe.executedPlan))
+            try Option(en.qe).foreach(qe => plans.add(qe.executedPlan))
             catch { case _: Exception => () }
           case _ => ()
         }
@@ -108,7 +117,7 @@ object Bridge {
       sc.removeSparkListener(listener)
     }
     import scala.jdk.CollectionConverters._
-    paths.asScala.toSeq.sorted
+    plans.asScala.toSeq
   }
 
   /** Every SCALAR expression in the plan that cannot participate in

@@ -4,6 +4,8 @@ import java.util.Locale
 
 import org.apache.spark.sql.DataFrame
 
+import graft.stats.LocalBattery.quantile7
+
 /** Vector FIGURE RENDERER for the reference's two published plots —
   * closing the one remaining surface gap ("figure frames emitted, no
   * graphics device"): the engine renders `figures/sample_size_se` and
@@ -128,14 +130,6 @@ object SvgFigures {
   }
 
   // ---- figure 2: estimates_400_400 (simulation.R:399-436) ------------
-
-  /** R/ggplot type-7 quantile (stat_boxplot's default). */
-  private[graft] def quantile7(sorted: Array[Double], p: Double): Double = {
-    val hRaw = (sorted.length - 1) * p
-    val lo = hRaw.toInt
-    if (lo >= sorted.length - 1) sorted.last
-    else sorted(lo) + (hRaw - lo) * (sorted(lo + 1) - sorted(lo))
-  }
 
   private case class Box(coefNum: Int, methodNum: Int, method: String,
                          q1: Double, med: Double, q3: Double,

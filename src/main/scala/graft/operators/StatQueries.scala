@@ -19,15 +19,16 @@ import QueryDef.dsumd
   */
 object StatQueries {
 
-  /** Gramian XᵀX of [1, l_quantity, l_discount] via the distributed
-    * GramAgg, emitted as (i, j, value) rows. Oracle: explicit sums. */
+  /** Gramian XᵀX of [1, l_quantity, l_discount] as one distributed
+    * cross-moment of X with itself (MomentPass.tdot), emitted as (i, j,
+    * value) rows. Oracle: explicit sums. */
   val qGramian = QueryDef(
     "s1_gramian",
     (s, dir) => {
       val li = Tables.lineitem(s, dir)
       val x = Design(Design.intercept, ("q", col("l_quantity")), ("d", col("l_discount")))
       val pass = new MomentPass(li)
-      val g = pass.gram(x, lit(1.0))
+      val g = pass.tdot(x, x)
       pass.run()
       val m = g()
       val rows = for { i <- 0 until 3; j <- 0 until 3 }

@@ -6,14 +6,16 @@ import org.apache.spark.sql.functions.udaf
 
 /** Distributed moment aggregates (SURVEY.md §2.6 A1/A2, §2.12).
   *
-  * All three are fixed-length double-vector reductions with map-side
+  * CrossAgg and VecSumAgg are fixed-length double-vector reductions with map-side
   * partial aggregation (Spark runs Aggregator-backed UDAFs as partial +
   * final, so the shuffle carries one buffer per partition, not rows).
   * Buffers size themselves lazily on the first row so callers don't
   * thread dimensions through.
   *
   * Reference semantics: per-user score sums (helpers.R:18, the meat),
-  * crossprod Gramians (wcls.R:57,84 and every Hessian block).
+  * crossprod Gramians (wcls.R:57,84 and every Hessian block). A weighted
+  * Gramian XᵀWX is `cross(X·w, X, 1)`: the caller projects the scaled
+  * design, so the weight is evaluated once per row, not once per column.
   */
 object Aggregates {
 
@@ -36,26 +38,6 @@ object Aggregates {
     def finish(b: Array[Double]): Seq[Double] = b.toSeq
     def bufferEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
     def outputEncoder: Encoder[Seq[Double]] = ExprEnc.doubleSeq
-  }
-
-  /** Σ_rows w · v vᵀ (flattened p·p, row-major). */
-  class GramAgg extends SumAgg[VW] {
-    def reduce(b0: Array[Double], in: VW): Array[Double] = {
-      if (in.v == null) return b0
-      val p = in.v.size
-      val b = grow(b0, p * p)
-      val v = new Array[Double](p)
-      var i = 0
-      while (i < p) { v(i) = in.v(i); i += 1 }
-      i = 0
-      while (i < p) {
-        val wv = in.w * v(i)
-        var j = 0
-        while (j < p) { b(i * p + j) += wv * v(j); j += 1 }
-        i += 1
-      }
-      b
-    }
   }
 
   /** Σ_rows w · u vᵀ (flattened p·q, row-major). */
@@ -161,9 +143,7 @@ object Aggregates {
     val doubleSeq: Encoder[Seq[Double]] = of[Seq[Double]]
   }
 
-  /** DataFrame-callable forms: gram(varr, w), cross(uarr, varr, w), vsum(varr, w). */
-  def gram(v: Column, w: Column): Column =
-    udaf(new GramAgg, ExprEnc.of[VW]).apply(v, w)
+  /** DataFrame-callable forms: cross(uarr, varr, w), vsum(varr, w). */
   def cross(u: Column, v: Column, w: Column): Column =
     udaf(new CrossAgg, ExprEnc.of[UVW]).apply(u, v, w)
   def vsum(v: Column, w: Column): Column =

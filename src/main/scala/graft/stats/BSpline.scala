@@ -54,14 +54,14 @@ final case class BSpline(knots: Array[Double], degree: Int, nBasis: Int) {
     out
   }
 
-  /** Basis as nBasis named Catalyst columns via the native codegen'd
-    * expression (graft.functions.BSplineBasisExpr — same kernel, no UDF
-    * boxing; subexpression elimination collapses the per-item extracts
-    * to one basis evaluation per row). */
-  def designOf(prefix: String, x: Column): Design = {
-    val arrCol = org.apache.spark.sql.graft.Bridge.toColumn(
+  /** The basis at x as one Catalyst array of nBasis doubles, by the
+    * native codegen'd expression (graft.functions.BSplineBasisExpr, the
+    * same kernel, no UDF boxing). An aggregate evaluates each of its
+    * inputs on its own, with no common subexpressions shared, so
+    * [[FrameMoments.basis]] projects this array once per row and each
+    * design column reads one item of it. */
+  def arrayOf(x: Column): Column =
+    org.apache.spark.sql.graft.Bridge.toColumn(
       graft.functions.BSplineBasisExpr(
         org.apache.spark.sql.graft.Bridge.toExpression(x.cast("double")), this))
-    Design((0 until nBasis).map(j => (s"$prefix$j", arrCol.getItem(j))))
-  }
 }

@@ -195,7 +195,7 @@ object Estimators {
       val beta: DenseVector[Double] = wls(x, y, w)
       val betaA: DenseVector[Double] = beta(dH until dH + width(xa))
       val wres: V = w * (y - mv(x, beta))
-      def eq(m: Batch): Eq = new Eq(rscale(x, wres), m.gram(x, w))
+      def eq(m: Batch): Eq = new Eq(rscale(x, wres), m.tdot(rscale(x, w), x))
 
       /** The score's derivative in the propensity intercept
         * (wcls.R:85-95); `raw` is xa de-centered. */
@@ -220,7 +220,7 @@ object Estimators {
         val pi = piInternal
         val num = raw * (pi / (1.0 - pi))
         val p = num / (num + 1.0)
-        new Eq(rscale(xo, isI - p), m.gram(xo, p * (1.0 - p)))
+        new Eq(rscale(xo, isI - p), m.tdot(rscale(xo, p * (1.0 - p)), xo))
       }
     }
 
@@ -300,7 +300,7 @@ object Estimators {
 
       val m = batch()
       val eH = kept.headOption.map(pHHat =>
-        new Eq(rscale(xAh, a - pHHat), m.gram(xAh, pHHat * (1.0 - pHHat))))
+        new Eq(rscale(xAh, a - pHHat), m.tdot(rscale(xAh, pHHat * (1.0 - pHHat)), xAh)))
       val (eA, eS) = (pr.eq(m), s.eq(m))
       val chain = s.inPropensity(m, pr, hcat(raws: _*))
       val chainH = kept.headOption.map { pHHat =>

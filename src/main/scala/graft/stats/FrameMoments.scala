@@ -11,7 +11,9 @@ import scala.collection.mutable.ArrayBuffer
   * Spark job) and the meat is [[Sandwich]]'s; the logistic, WLS and knot
   * fits are [[Moments]]', shared with the array backend. Restrictions to
   * internal or external rows are weights by the row's indicator, so they
-  * ride the batch they appear in. */
+  * ride the batch they appear in. Row scales and spline bases are
+  * projected onto the panel frame (uncached `keep`s), so the aggregates
+  * read each as one column instead of re-evaluating it per design column. */
 class FrameMoments(df0: DataFrame) extends Moments with FrameRows {
   import FrameMoments._
 
@@ -36,6 +38,16 @@ class FrameMoments(df0: DataFrame) extends Moments with FrameRows {
   }
 
   def batch(): Batch = new MomentPass(frame)
+
+  // an aggregate evaluates each of its inputs on its own, so a scale or
+  // basis written into every design column would be evaluated once per
+  // column; as a projected column it is evaluated once per row, and a
+  // batch opened before the projection still reads it
+  def rscale(x: Design, s: Column): Design = x.scale(keep(Seq(s)).head)
+  def basis(x: Column, spline: BSpline): Design = {
+    val arr = keep(Seq(spline.arrayOf(x))).head
+    Design((0 until spline.nBasis).map(j => (s"bs$j", arr.getItem(j))))
+  }
 
   def meat(scores: Design, nClusters: Int, tMax: Int): DenseMatrix[Double] =
     Sandwich.meat(withBlockCluster(frame, info.copy(nUsers = nClusters, tMax = tMax)),
@@ -76,11 +88,9 @@ trait FrameRows extends Rows {
   def width(x: Design): Int = x.width
   def column(x: Design, j: Int): Column = x.terms(j)._2
   def columns(x: Design, r: Range): Design = Design(r.map(x.terms))
-  def rscale(x: Design, s: Column): Design = x.scale(s)
   def xminus(x: Design, z: Design): Design =
     Design(x.terms.zip(z.terms).map { case ((n, c), (_, d)) => (n, c - d) })
   def mv(x: Design, beta: DenseVector[Double]): Column = x.dot(beta.toArray.toSeq)
-  def basis(x: Column, spline: BSpline): Design = spline.designOf("bs", x)
 
   def rowsOf(v: Column, internal: Boolean): Column = v * (if (internal) isI else isE)
   def rows(x: Design, internal: Boolean): Design = x.scale(if (internal) isI else isE)

@@ -32,6 +32,14 @@ object LocalBattery {
   private def mina(a: A): Double = { var m = Double.PositiveInfinity; var i = 0; while (i < a.length) { if (a(i) < m) m = a(i); i += 1 }; m }
   private def maxa(a: A): Double = { var m = Double.NegativeInfinity; var i = 0; while (i < a.length) { if (a(i) > m) m = a(i); i += 1 }; m }
 
+  /** R's type-7 quantile (also ggplot's boxplot default) of sorted values. */
+  private[graft] def quantile7(sorted: A, p: Double): Double = {
+    val hRaw = (sorted.length - 1) * p
+    val lo = hRaw.toInt
+    if (lo >= sorted.length - 1) sorted.last
+    else sorted(lo) + (hRaw - lo) * (sorted(lo + 1) - sorted(lo))
+  }
+
   final case class Panel(
       y: A, a: A, x1: A, x2: A, x3: A, pH: A, pHA: A,
       isInternal: Array[Boolean], userId: Array[Long]) {
@@ -133,19 +141,10 @@ object LocalBattery {
       def max(v: A): () => Double = later(maxa(v))
       def quantile(v: A, ps: Seq[Double]): () => Seq[Double] = later {
         val s = v.clone(); java.util.Arrays.sort(s)
-        ps.map { q =>
-          val h = (s.length - 1) * q
-          val fl = math.floor(h).toInt
-          s(fl) + (h - fl) * (s(math.min(fl + 1, s.length - 1)) - s(fl))
-        }
+        ps.map(quantile7(s, _))
       }
-      def gram(x: X, w: A): () => DenseMatrix[Double] = later(rscale(x, w).t * x)
       def tdot(x: X, z: X): () => DenseMatrix[Double] = later(x.t * z)
       def tvec(x: X, v: A): () => DenseVector[Double] = later(x.t * DenseVector(v))
-      def normal(x: X, y: A, w: A): () => (DenseMatrix[Double], DenseVector[Double]) = later {
-        val xtw = rscale(x, w).t
-        (xtw * x, xtw * DenseVector(y))
-      }
       def run(): Unit = ()
     }
 

@@ -10,21 +10,18 @@ final case class LogisticFit(coef: DenseVector[Double], converged: Boolean, warn
 
 /** One batch of reductions over a panel's rows: requested first, read
   * after `run()`. The DataFrame backend's batch ([[MomentPass]]) is one
-  * Spark job. */
+  * Spark job. A weighted Gramian XᵀWX is `tdot(rscale(x, w), x)`: each
+  * backend evaluates the row scale once, so no reduction needs a weight. */
 trait Reductions[V, X] {
   def sum(v: V): () => Double
   def min(v: V): () => Double
   def max(v: V): () => Double
   /** R's default (type 7) quantiles of v at the non-empty `ps`. */
   def quantile(v: V, ps: Seq[Double]): () => Seq[Double]
-  /** Σ w·x xᵀ */
-  def gram(x: X, w: V): () => DenseMatrix[Double]
   /** Σ x zᵀ */
   def tdot(x: X, z: X): () => DenseMatrix[Double]
   /** Σ x·v */
   def tvec(x: X, v: V): () => DenseVector[Double]
-  /** The normal equations of y on x under weight w: (XᵀWX, XᵀWy). */
-  def normal(x: X, y: V, w: V): () => (DenseMatrix[Double], DenseVector[Double])
   def run(): Unit
 }
 
@@ -68,13 +65,9 @@ trait Rows {
   def width(x: X): Int
   def column(x: X, j: Int): V
   def columns(x: X, r: Range): X
-  /** x with each row scaled by s. */
-  def rscale(x: X, s: V): X
   def xminus(x: X, z: X): X
   /** The linear predictor x·β. */
   def mv(x: X, beta: DenseVector[Double]): V
-  /** The spline's basis at each row's x. */
-  def basis(x: V, spline: BSpline): X
 
   // the internal (or external) rows of the panel: the array backend
   // subsets them, the DataFrame backend weights by the row's indicator
@@ -124,6 +117,13 @@ trait Moments extends Rows {
   type Batch = Reductions[V, X]
   def batch(): Batch
 
+  // the per-row values a design may read many times, which the DataFrame
+  // backend projects as frame columns so each is evaluated once per row
+  /** x with each row scaled by s. */
+  def rscale(x: X, s: V): X
+  /** The spline's basis at each row's x. */
+  def basis(x: V, spline: BSpline): X
+
   /** Σ over blocks of the per-block score sums' outer products, blocks
     * of `tMax` rows in the reference's layout (Sandwich). */
   def meat(scores: X, nClusters: Int, tMax: Int): DenseMatrix[Double]
@@ -139,10 +139,12 @@ trait Moments extends Rows {
     beta()
   }
 
-  /** Requests the normal equations in `m`; the solve reads them after its run. */
+  /** Requests XᵀWX and XᵀWy in `m`, both from one scaled design; the
+    * solve reads them after its run. */
   private def wlsIn(m: Batch, x: X, y: V, w: V): () => DenseVector[Double] = {
-    val ne = m.normal(x, y, w)
-    () => { val (xtwx, xtwy) = ne(); xtwx \ xtwy }
+    val xw = rscale(x, w)
+    val (xtwx, xtwy) = (m.tdot(xw, x), m.tvec(xw, y))
+    () => xtwx() \ xtwy()
   }
 
   /** R glm.fit's binomial IRLS (tools/golden_oracle.py `glm_logistic`):

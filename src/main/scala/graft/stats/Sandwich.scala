@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * array backend, LocalBattery, sums the same blocks of consecutive rows
   * in the task). Two distributed aggregations: a hash-shuffle
   * groupBy(cluster) with map-side partial vector sums, then a tiny
-  * Gramian over one row per cluster.
+  * cross-moment of the sums with themselves, one row per cluster.
   *
   * REFERENCE QUIRK (replicated faithfully, SURVEY.md §7.4.2/§7.4.5):
   * the reference's "balanced" path reshapes the score matrix as
@@ -30,7 +30,7 @@ object Sandwich {
     val perCluster = df.groupBy(cluster.as("__cluster"))
       .agg(Aggregates.vsum(scores.arr, lit(1.0)).as("__ssum"))
     val flat = perCluster
-      .select(Aggregates.gram(col("__ssum"), lit(1.0)))
+      .select(Aggregates.cross(col("__ssum"), col("__ssum"), lit(1.0)))
       .head().getSeq[Double](0)
     val d = scores.width
     LinAlg.fromFlat(flat, d, d)

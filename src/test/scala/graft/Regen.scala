@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 /** Regenerates the committed fixtures the specs compare against, on the
   * specs' own session ([[SparkTestSession]]), from the repo root:
   *
-  *   sbt 'Test/runMain graft.Regen pins|oraclefix|latex|figures|card ...'
+  *   sbt 'Test/runMain graft.Regen pins|oraclefix|latex|figures|card|threeway ...'
   *
   *  - `pins`: prints FixturePinSpec's hash for every no-oracle query,
   *    run twice (STABLE/UNSTABLE); only STABLE hashes belong in the spec.
@@ -17,12 +17,16 @@ import org.apache.spark.sql.functions._
   *  - `latex`, `figures`, `card`: rewrite the committed LaTeX tables, SVG
   *    figures and dataset card that LatexReportSpec, SvgFiguresSpec and
   *    DatasetCardSpec compare byte for byte.
+  *  - `threeway`: writes OracleThreeWaySpec's generated panel in the
+  *    reference CSV layout to a temp file and rewrites its oracle by
+  *    running `tools/golden_oracle.py` on it (needs python3 with numpy
+  *    and pandas).
   *
   * A query that throws (s4/s5/s6 need the reference panel) is reported
   * by name, the rest still run, and the exit code is then 1. */
 object Regen {
   private val sf001 = "/root/testdata/sf0.01"
-  private val modes = Seq("pins", "oraclefix", "latex", "figures", "card")
+  private val modes = Seq("pins", "oraclefix", "latex", "figures", "card", "threeway")
 
   def main(args: Array[String]): Unit = {
     val unknown = args.filterNot(modes.contains)
@@ -169,6 +173,17 @@ object Regen {
       sources.DatasetCard.writeBoth(spark, sf001,
         "results/dataset_card_sf001.md", "results/dataset_card_sf001.json")
       println("CARD_WRITTEN results/dataset_card_sf001.md, .json")
+    }
+
+    if (args.contains("threeway")) attempt("threeway") {
+      val csv = Files.createTempFile("threeway_panel", ".csv")
+      try {
+        OracleThreeWaySpec.writeReferenceCsv(spark, csv.toString)
+        val exit = new ProcessBuilder("python3", "tools/golden_oracle.py", csv.toString,
+          OracleThreeWaySpec.oracle).inheritIO().start().waitFor()
+        require(exit == 0, s"tools/golden_oracle.py exited with $exit")
+        println(s"WROTE ${OracleThreeWaySpec.oracle}")
+      } finally Files.deleteIfExists(csv)
     }
 
     spark.stop()

@@ -1,8 +1,11 @@
 # Numpy re-derivation of the ten estimators on a panel CSV laid out as the
 # reference's example_dat.csv: row index first, users fastest within t,
 # and columns is_internal, x1, x2, x3, p_h, p_h_a, a, y and user_id.
-#     python3 tools/golden_oracle.py [panel.csv]
+#     python3 tools/golden_oracle.py [panel.csv [estimates.csv]]
 # Without an argument it reads the reference panel (Battery.examplePath).
+# It prints the eight methods the reference's goldens check; with an
+# estimates path it also writes all ten (method, coef, estimate, se,
+# tilt_warning) at full precision.
 import sys
 import numpy as np, pandas as pd
 np.set_printoptions(suppress=True)
@@ -175,8 +178,9 @@ def etwcls(dat, pooling):
         Vp = Lsi@Lh@V@Lh.T@Lsi
     return brp, np.sqrt(np.diag(Vp)), tilt_warn
 
-for pm in ['equal','kronecker','full']:
-    br, se, tw = etwcls(d, pm)
+fits = {}
+for pm, name in [('equal','ET-WCLS-Equal'), ('kronecker','ET-WCLS-Kron'), ('full','ET-WCLS')]:
+    br, se, tw = fits[name] = etwcls(d, pm)
     print(f'ET-WCLS-{pm:10s}', np.round(br,3), np.round(se,3), 'warn=',tw)
 print('golden equal: -1.802 (1.514) 5.688 (1.682)')
 print('golden kron : -1.826 (1.238) 5.924 (1.365)')
@@ -255,11 +259,11 @@ def pwcls(dat, internal_only=False, observational=False):
     n_users = datp.user_id.nunique()
     sand = sandwich_balanced(S, H, n_users, d_)
     V = sand[d_-2:, d_-2:]
-    return beta_r, np.sqrt(np.diag(V))
+    return beta_r, np.sqrt(np.diag(V)), False
 
-br,se = pwcls(d, internal_only=True);  print('P-WCLS-Internal  ', np.round(br,3), np.round(se,3), ' golden -1.814 (1.276) 6.321 (1.385)')
-br,se = pwcls(d);                      print('P-WCLS-Pooled    ', np.round(br,3), np.round(se,3), ' golden -2.363 (0.98) 6.07 (0.994)')
-br,se = pwcls(d, observational=True);  print('P-WCLS-Pooled-Obs', np.round(br,3), np.round(se,3), ' golden -2.441 (0.988) 6.272 (1.037)')
+br,se,tw = fits['P-WCLS-Internal'] = pwcls(d, internal_only=True);  print('P-WCLS-Internal  ', np.round(br,3), np.round(se,3), ' golden -1.814 (1.276) 6.321 (1.385)')
+br,se,tw = fits['P-WCLS-Pooled'] = pwcls(d);                        print('P-WCLS-Pooled    ', np.round(br,3), np.round(se,3), ' golden -2.363 (0.98) 6.07 (0.994)')
+br,se,tw = fits['P-WCLS-Pooled-Obs'] = pwcls(d, observational=True);  print('P-WCLS-Pooled-Obs', np.round(br,3), np.round(se,3), ' golden -2.441 (0.988) 6.272 (1.037)')
 
 def drwcls(dat):
     datp = dat.reset_index(drop=True)
@@ -348,9 +352,9 @@ def drwcls(dat):
     brp = Lsi@zs
     Lh = Lam[fh,:]+Lam[sh,:]
     Vp = Lsi@Lh@V@Lh.T@Lsi
-    return brp, np.sqrt(np.diag(Vp))
+    return brp, np.sqrt(np.diag(Vp)), tilt_warn
 
-br,se = drwcls(d); print('DR-WCLS ', np.round(br,3), np.round(se,3), ' golden -2.164 (1.157) 5.944 (1.286)')
+br,se,tw = fits['DR-WCLS'] = drwcls(d); print('DR-WCLS ', np.round(br,3), np.round(se,3), ' golden -2.164 (1.157) 5.944 (1.286)')
 
 def petwcls(dat):
     datp = dat.reset_index(drop=True)
@@ -438,6 +442,43 @@ def petwcls(dat):
     brp = Lsi@zs
     Lh = Lam[:d_r,:]+Lam[d_r:2*d_r,:]+Lam[2*d_r:,:]
     Vp = Lsi@Lh@V@Lh.T@Lsi
-    return brp, np.sqrt(np.diag(Vp))
+    return brp, np.sqrt(np.diag(Vp)), tilt_warn
 
-br,se = petwcls(d); print('PET-WCLS', np.round(br,3), np.round(se,3), ' golden -2.561 (0.964) 5.817 (0.959)')
+br,se,tw = fits['PET-WCLS'] = petwcls(d); print('PET-WCLS', np.round(br,3), np.round(se,3), ' golden -2.561 (0.964) 5.817 (0.959)')
+
+def wcls(dat, internal_only=False):
+    # wcls.R: p_r from a ~ 1, then y ~ beta_h + beta_r under w = p_r_a/p_h_a
+    datp = (dat[dat.is_internal] if internal_only else dat).reset_index(drop=True)
+    n = len(datp); y=datp.y.values; a=datp.a.values
+    x1,x2,x3 = datp.x1.values, datp.x2.values, datp.x3.values
+    Xa = np.ones((n,1)); alpha,_ = glm_logistic(Xa, a)
+    p_r = 1/(1+np.exp(-(Xa@alpha)))
+    a_c = a - p_r; p_r_a = a*p_r+(1-a)*(1-p_r); w = p_r_a/datp.p_h_a.values
+    Xh = np.column_stack([np.ones(n), x1, x2, x3])
+    Xr = np.column_stack([a_c, a_c*x1])
+    Xhr = np.column_stack([Xh, Xr])
+    beta = wls(Xhr, y, w); beta_r = beta[4:]
+    d_ = 1 + 4 + 2
+    S = np.zeros((n,d_)); H = np.zeros((d_,d_))
+    S[:,0] = a - p_r; H[0,0] = np.sum(p_r*(1-p_r))
+    wres = w*(y - Xhr@beta)
+    S[:,1:] = wres[:,None]*Xhr
+    H[1:,1:] = (Xhr*w[:,None]).T@Xhr
+    Xr_raw = Xr/a_c[:,None]
+    logd = -(2*a-1)*p_r*(1-p_r)/p_r_a; prd = -(1-p_r)
+    H[1:,0] = ((Xhr*wres[:,None]).T@logd
+               + (np.column_stack([np.zeros((n,4)), -p_r[:,None]*Xr_raw])*wres[:,None]).T@prd
+               + (Xhr*((p_r*(Xr@beta_r)/a_c*w))[:,None]).T@prd)
+    sand = sandwich_balanced(S, H, datp.user_id.nunique(), d_)
+    return beta_r, np.sqrt(np.diag(sand[5:, 5:])), False
+
+fits['WCLS-Internal'] = wcls(d, internal_only=True)
+fits['WCLS-Pooled'] = wcls(d)
+
+if len(sys.argv) > 2:
+    with open(sys.argv[2], 'w') as f:
+        f.write('method,coef,estimate,se,tilt_warning\n')
+        for m in sorted(fits):
+            br, se, tw = fits[m]
+            for i, coef in enumerate(['Intercept', 'Slope']):
+                f.write(f'{m},{coef},{float(br[i])!r},{float(se[i])!r},{str(bool(tw)).lower()}\n')
